@@ -106,7 +106,9 @@ def main():
     if hasattr(os, "sched_getaffinity"):
         cpus = str(len(os.sched_getaffinity(0)))
     env = dict(os.environ, SPARK_GRAFT_CPUS=cpus, PERFBENCH_T0_MS=str(t0_ms))
-    env.pop("SPARK_GRAFT_MASTER", None)
+    # the harness keeps Spark's scratch space inside the checkout
+    for k in ("SPARK_GRAFT_MASTER", "SPARK_LOCAL_DIRS", "LOCAL_DIRS"):
+        env.pop(k, None)
     cmd = [java, f"-Xms{HEAP}", f"-Xmx{HEAP}", f"-Djava.io.tmpdir={tmpdir}", "-Dspark.ui.enabled=false",
            "-Dspark.sql.session.timeZone=UTC", "-Duser.timezone=UTC",
            f"-Dlog4j2.configurationFile={os.path.join(BENCH, 'log4j2.properties')}"]
