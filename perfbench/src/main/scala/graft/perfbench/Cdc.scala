@@ -16,22 +16,32 @@ import graft.streaming.Pipelines
 /** The CDC path end to end, through `Pipelines.startEnrichPipeline` and
   * `Pipelines.startDlqReplay`, in two phases of one session:
   *
-  *  - trickle: an open loop. One generator thread renames pre-built
-  *    envelope files from hidden names into the watched landing directory
-  *    on a seeded Poisson schedule, at a low and then a high fixed rate,
-  *    into a pipeline with a fixed ProcessingTime trigger. A file's
-  *    visibility latency runs from its scheduled landing to the commit of
-  *    the micro-batch that wrote its rows to a sink.
   *  - backfill: a pre-staged backlog drained with AvailableNow in
   *    `maxFilesPerTrigger` batches, then the DLQ replayed against a repair
   *    dimension that covers every missed key, until the replay has read
-  *    every DLQ row. Repeated for `cycles` fresh checkpoints.
+  *    every DLQ row. A small warm-up leg (checked, not timed) comes first.
+  *  - trickle: an open loop. One generator thread renames pre-built
+  *    envelope files from hidden names into the watched landing directory
+  *    on a seeded schedule, at a low and then a high fixed rate, into a
+  *    pipeline with a fixed ProcessingTime trigger. A file's visibility
+  *    latency runs from its scheduled landing to the commit of the
+  *    micro-batch that wrote its rows to a sink.
   */
 object Cdc {
   val DimKey = "c_custkey"
   val DimCols = Seq("c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
 
-  final case class Step(name: String, filesPerS: Double, rowsPerFile: Int, files: Int, firstVersion: Long)
+  final case class Step(name: String, filesPerS: Double, rowsPerFile: Int, files: Int, firstVersion: Long,
+      untraced: Boolean = false)
+
+  /** Files of the trickle warm-up (at the `lo` rate) and of the backfill
+    * warm-up leg.
+    */
+  val TrickleWarmupFiles = 15
+  val BackfillWarmupFiles = 2
+
+  /** The tail percentile a measured trickle step must support on its own. */
+  val StepTailPercentile = 85.0
 
   final case class Staged(dimPath: String, repairPath: String, landing: String,
       backlog: String, backlogFiles: Int, warmup: String, warmupFiles: Int)
@@ -100,33 +110,38 @@ object Cdc {
     val c = ctx.wconf("cdc")
     val t = c.get("trickle")
     val b = c.get("backfill")
-    val minFiles = t.get("min_files_per_step").asInt()
-    // step sizes follow --seconds: each measured step lasts its share of it
+    // step sizes follow --seconds: each measured step lasts half of it
     val stepConf = t.get("steps").elements().asScala.toSeq
     var next = 1L
-    def mkStep(name: String, rate: Double, rows: Int, files: Int): Step = {
-      val s = Step(name, rate, rows, files, next)
+    def mkStep(name: String, rate: Double, rows: Int, files: Int, untraced: Boolean = false): Step = {
+      val s = Step(name, rate, rows, files, next, untraced)
       next += files.toLong * rows
       s
     }
-    val warm = stepConf.head
-    val steps = mkStep("warm", warm.get("files_per_s").asDouble(), warm.get("rows_per_file").asInt(),
-      t.get("warmup_files").asInt()) +: stepConf.map { s =>
+    val measuredConf = stepConf.map { s =>
       val rate = s.get("files_per_s").asDouble()
-      val files = math.round(rate * s.get("share").asDouble() * ctx.seconds).toInt
-      require(files >= minFiles, s"step ${s.get("name").asText()} lands $files files in ${ctx.seconds} s; " +
-        s"at least $minFiles are needed for a tail percentile with 10 samples beyond it")
-      mkStep(s.get("name").asText(), rate, s.get("rows_per_file").asInt(), files)
+      val files = math.round(rate * ctx.seconds / 2.0).toInt
+      require(Stats.tailPercentile(files).exists(_ >= StepTailPercentile),
+        s"step ${s.get("name").asText()} lands $files files in ${ctx.seconds / 2.0} s; too few for a " +
+          f"p$StepTailPercentile%.0f with ${Stats.MinBeyond} samples beyond it")
+      (s.get("name").asText(), rate, s.get("rows_per_file").asInt(), files)
     }
-    // a traced run repeats the first measured step with the scheduler
-    // listeners detached, to measure what tracing costs
-    val allSteps = if (ctx.trace) {
-      val lo = steps(1)
-      steps :+ mkStep(lo.name + "_untraced", lo.filesPerS, lo.rowsPerFile, lo.files)
-    } else steps
+    val (loName, loRate, loRows, loFiles) = measuredConf.head
+    def measuredStep(m: (String, Double, Int, Int)): Step = mkStep(m._1, m._2, m._3, m._4)
+    // a traced run also lands the first measured step's rate with the
+    // scheduler listeners detached, half before and half after the traced
+    // step, so that drift across the run (JIT, landing-directory size)
+    // weighs on both sides alike: what is left is what tracing costs
+    val allSteps = mkStep("warm", loRate, loRows, TrickleWarmupFiles) +: (
+      if (ctx.trace)
+        Seq(mkStep(loName + "_untraced_a", loRate, loRows, loFiles / 2, untraced = true),
+          measuredStep(measuredConf.head),
+          mkStep(loName + "_untraced_b", loRate, loRows, loFiles - loFiles / 2, untraced = true)) ++
+          measuredConf.tail.map(measuredStep)
+      else measuredConf.map(measuredStep))
     val dimSf = c.get("dimension_sf").asDouble()
     val (st, setupS) = ctx.setup { d =>
-      stage(ctx, d, allSteps, b.get("backlog_files").asInt(), b.get("warmup_files").asInt(), b.get("rows_per_file").asInt(),
+      stage(ctx, d, allSteps, b.get("backlog_files").asInt(), BackfillWarmupFiles, b.get("rows_per_file").asInt(),
         b.get("miss_share").asDouble(), t.get("miss_share").asDouble(), dimSf)
     }
     val dimRows = Gen.rows("customer", dimSf)
@@ -139,28 +154,23 @@ object Cdc {
     ctx.jvm.resetPeak()
 
     // ----------------------------------------------------------- backfill
-    // backfill runs first, after a warm-up cycle over a small backlog
-    // (checked, not timed) that also brings the JIT up to speed for the
-    // trickle's small batches
-    val warmCycles = 1
-    val cycles = warmCycles + b.get("cycles").asInt() * (if (ctx.trace) 2 else 1)
+    // backfill runs first: a warm-up leg over a small backlog (checked, not
+    // timed), which also brings the JIT up to speed for the trickle's small
+    // batches, then the measured leg, each on a fresh checkpoint and sinks
     val perFile = b.get("rows_per_file").asInt()
-    val bfRows = st.backlogFiles.toLong * perFile
-    final case class Cycle(k: Int, traced: Boolean, drainMs: Double, dlqRows: Long, replayMs: Double)
-    val all = (0 until cycles).map { k =>
-      if (ctx.trace) { if ((k - warmCycles) % 2 == 0) ctx.probe.attach() else ctx.probe.detach() }
+    final case class Leg(k: Int, drainMs: Double, dlqRows: Long, replayMs: Double)
+    def leg(k: Int, backlog: String, files: Int): Leg = {
       val w = s"${ctx.work}/backfill/c$k"
       val name = s"cdc_backfill_c$k"
       val d0 = nowMs
       val bq = Pipelines.startEnrichPipeline(name,
-        source(spark, if (k < warmCycles) st.warmup else st.backlog, Some(b.get("max_files_per_trigger").asInt())),
+        source(spark, backlog, Some(b.get("max_files_per_trigger").asInt())),
         () => spark.read.parquet(st.dimPath), DimKey, DimCols,
         s"$w/ok", s"$w/dlq", s"$w/ckpt", Trigger.AvailableNow())
       bq.awaitTermination()
       val d1 = nowMs
       ctx.probe.drain()
       val fb = SourceLog.read(s"$w/ckpt")
-      val files = if (k < warmCycles) st.warmupFiles else st.backlogFiles
       if (fb.size != files) problems += s"backfill c$k: source log lists ${fb.size} of $files files"
       lap("backfill_drain")
       val dlqRows = spark.read.parquet(s"$w/dlq").count()
@@ -175,20 +185,21 @@ object Cdc {
       if (!replayed) problems += s"backfill c$k: replay did not read all $dlqRows DLQ rows within 60 s"
       val rEnd = progressOf(ctx.probe, rname).filter(_.numInputRows > 0).map(commitMs).foldLeft(r0)(math.max)
       lap("backfill_replay")
-      Cycle(k, ctx.probe.isAttached, d1 - d0, dlqRows, rEnd - r0)
+      Leg(k, d1 - d0, dlqRows, rEnd - r0)
     }
-    if (ctx.trace) ctx.probe.attach()
-    val done = all.drop(warmCycles)
-    def checkCycles(cys: Seq[Cycle], first: Long, rows: Long): Unit = {
-      val (v, p) = SinkCheck.check(cys.map(cy => s"${ctx.work}/backfill/c${cy.k}"),
+    def checkLeg(l: Leg, first: Long, rows: Long): Unit = {
+      val (v, p) = SinkCheck.check(Seq(s"${ctx.work}/backfill/c${l.k}"),
         SinkCheck.Input(first, rows, ctx.seed, dimRows, b.get("miss_share").asDouble()),
         st.dimPath, Some(st.repairPath))
       violations += v
-      envelopes += rows * cys.size
+      envelopes += rows
       p.foreach(x => problems += s"backfill: $x")
     }
-    checkCycles(all.take(warmCycles), WarmupFirstVersion, st.warmupFiles.toLong * perFile)
-    checkCycles(done, BacklogFirstVersion, bfRows)
+    val warmLeg = leg(0, st.warmup, st.warmupFiles)
+    val bf = leg(1, st.backlog, st.backlogFiles)
+    val bfRows = st.backlogFiles.toLong * perFile
+    checkLeg(warmLeg, WarmupFirstVersion, st.warmupFiles.toLong * perFile)
+    checkLeg(bf, BacklogFirstVersion, bfRows)
     lap("backfill_check")
 
     // ------------------------------------------------------------ trickle
@@ -196,16 +207,24 @@ object Cdc {
     val tw = s"${ctx.work}/trickle"
     val rng = new scala.util.Random(ctx.seed)
     final case class Land(step: Int, name: String, hidden: String, schedMs: Double)
-    // a pause after the warm-up lets its backlog drain before measuring
-    val settleMs = t.get("settle_ms").asDouble()
+    // A pause of one trigger interval before each measured step: the
+    // previous step's last batch starts before the step's first file lands,
+    // so every step starts from an empty backlog. Arrivals are
+    // jittered-periodic: one file at a uniformly drawn time in each 1/rate
+    // slot, so a step samples the trigger phase evenly and its median wait
+    // does not hang on where a run's bursts fell.
+    val settleMs = triggerMs.toDouble
+    val stepStart = new Array[Double](allSteps.size)
     val lands = {
       var at = 0.0
       allSteps.zipWithIndex.flatMap { case (s, si) =>
-        if (si == 1) at += settleMs
+        if (si > 0) at += settleMs
+        stepStart(si) = at
+        val slot = 1000.0 / s.filesPerS
+        at += s.files * slot
         (0 until s.files).map { f =>
-          at += -math.log(1.0 - rng.nextDouble()) * 1000.0 / s.filesPerS
           val name = f"${s.name}-$f%06d.parquet"
-          Land(si, name, "." + name, at)
+          Land(si, name, "." + name, stepStart(si) + (f + rng.nextDouble()) * slot)
         }
       }
     }.toIndexedSeq
@@ -214,7 +233,6 @@ object Cdc {
       () => spark.read.parquet(st.dimPath), DimKey, DimCols,
       s"$tw/ok", s"$tw/dlq", s"$tw/ckpt", Trigger.ProcessingTime(triggerMs))
     val actual = new Array[Double](lands.size)
-    @volatile var landed = 0
     val t0 = nowMs + 500.0
     val gen = new Thread(() => {
       lands.zipWithIndex.foreach { case (l, i) =>
@@ -227,15 +245,16 @@ object Cdc {
         Files.move(new File(st.landing, l.hidden).toPath, new File(st.landing, l.name).toPath,
           StandardCopyOption.ATOMIC_MOVE)
         actual(i) = nowMs
-        landed = i + 1
       }
     }, "perfbench-generator")
     gen.setDaemon(true)
     gen.start()
-    if (ctx.trace) {
-      val firstUntraced = lands.indexWhere(_.step == allSteps.size - 1)
-      while (landed < firstUntraced && gen.isAlive) Thread.sleep(2)
-      ctx.probe.detach()
+    // a traced run switches the scheduler listeners off for the untraced
+    // step and on again after it, halfway through the pause before a step
+    if (ctx.trace) allSteps.indices.drop(1).foreach { si =>
+      val at = t0 + stepStart(si) - settleMs / 2
+      while (nowMs < at && gen.isAlive) Thread.sleep(2)
+      if (allSteps(si).untraced) ctx.probe.detach() else ctx.probe.attach()
     }
     gen.join()
     val drained = awaitRows(ctx.probe, "cdc_trickle", trickleRows, 60)
@@ -252,12 +271,12 @@ object Cdc {
     }
     val unseen = latency.count(_.isNaN)
     if (unseen > 0) problems += s"trickle: $unseen landed files have no committed batch"
+    // a late generator means the run was not the open loop it claims
     val lateness = lands.indices.map(i => actual(i) - sched(i))
     val lateP99 = Stats.percentile(lateness, 99)
     val lateLimit = ctx.conf.get("generator_lateness_limit_ms").asDouble()
-    // a late generator means the run was not the open loop it claims: the
-    // run is marked invalid (its outputs may still be correct)
-    val valid = lateP99 <= lateLimit
+    if (lateP99 > lateLimit)
+      problems += f"trickle: generator lateness p99 $lateP99%.1f ms is over the $lateLimit%.0f ms limit"
     // backlog (landed, not yet in a started batch) at each batch start
     val batchOfFile = lands.map(l => fileBatch.getOrElse(l.name, Long.MaxValue))
     val sortedActual = actual.sorted
@@ -271,13 +290,13 @@ object Cdc {
     }
     val backlogOf = backlog.toMap
     def stepLat(si: Int) = lands.indices.filter(i => lands(i).step == si && !latency(i).isNaN).map(latency)
-    val measured = (1 until steps.size).toSeq
+    val measured = allSteps.indices.drop(1).filterNot(allSteps(_).untraced)
     // A step's backlog has grown when, past the step's first batch (which
     // starts from the previous step's level), its last third of batches
     // starts with more than one trigger interval's worth of arrivals above
     // its first third.
     val batchMs = Layers.p50(tProg.filter(_.numInputRows > 0).map(phase(_, "triggerExecution")))
-    measured.foreach { si =>
+    allSteps.indices.drop(1).foreach { si =>
       val s = allSteps(si)
       val from = t0 + lands.find(_.step == si).get.schedMs
       val to = t0 + lands.filter(_.step == si).last.schedMs
@@ -298,39 +317,39 @@ object Cdc {
     tp.foreach(p => problems += s"trickle: $p")
     lap("trickle_check")
 
-    val heapMb = ctx.jvm.livePeakMb
-
-    val measuredLat = measured.filterNot(si => allSteps(si).name.endsWith("_untraced")).flatMap(stepLat)
+    val measuredLat = measured.flatMap(stepLat)
     val (tailP, tailV) = Stats.tail(measuredLat)
-    val backfillRps = Stats.median(done.map(cy => bfRows / (cy.drainMs / 1e3)))
-    val replayRps = Stats.median(done.map(cy => cy.dlqRows / (cy.replayMs / 1e3)))
+    val tailMean = Stats.tailMean(measuredLat)._2
+    val backfillRps = bfRows / (bf.drainMs / 1e3)
+    val replayRps = bf.dlqRows / (bf.replayMs / 1e3)
     val headline = Map(
       "setup_s" -> setupS,
-      "latency_p50_ms" -> Stats.median(measuredLat),
-      "latency_tail_ms" -> tailV,
+      "latency_p50_ms" -> Stats.hd(measuredLat, 50),
+      "latency_tail_ms" -> tailMean,
       "throughput_per_s" -> backfillRps)
     val named = Seq(
       ("setup_s", setupS, "s"),
       ("fail_frac", violations.toDouble / envelopes, "ratio"),
-      ("heap_peak_mb", ctx.jvm.peakMb, "MB"),
-      ("live_heap_peak_mb", heapMb, "MB")) ++
-      measured.filterNot(si => allSteps(si).name.endsWith("_untraced")).flatMap { si =>
+      ("heap_peak_mb", ctx.jvm.peakMb, "MB")) ++
+      measured.flatMap { si =>
         val l = stepLat(si)
         val nm = allSteps(si).name
         val (p, v) = Stats.tail(l)
-        Seq((s"visible_p50_ms.$nm", Stats.median(l), "ms"), (f"visible_p$p%.0f_ms.$nm", v, "ms"))
+        Seq((s"visible_p50_ms.$nm", Stats.hd(l, 50), "ms"), (f"visible_p$p%.0f_ms.$nm", v, "ms"))
       } ++ Seq(
       ("backfill_rps", backfillRps, "1/s"),
       ("replay_rps", replayRps, "1/s"),
       ("gen_late_ms.p99", lateP99, "ms"),
-      ("valid", if (valid) 1.0 else 0.0, "bool"),
-      ("visible_all_p50_ms", Stats.median(measuredLat), "ms"),
-      (f"visible_all_p$tailP%.0f_ms", tailV, "ms"))
+      ("visible_all_p50_ms", Stats.hd(measuredLat, 50), "ms"),
+      (f"visible_all_p$tailP%.0f_ms", tailV, "ms"),
+      ("visible_tail_mean_ms", tailMean, "ms"))
     val (layers, spans) =
-      if (ctx.trace) CdcLayers.of(ctx, lands.map(l => (l.step, l.name, t0 + l.schedMs)),
-        fileBatch, tProg, backlog.map(_._2.toDouble), done.map(cy => (cy.k, cy.traced)),
-        stepLat(1), stepLat(allSteps.size - 1))
-      else (Nil, Nil)
+      if (ctx.trace) {
+        val lo = allSteps.indexWhere(s => s.name == loName)
+        val loUntraced = allSteps.indices.filter(allSteps(_).untraced).flatMap(stepLat)
+        CdcLayers.of(ctx, lands.map(l => (l.step, l.name, t0 + l.schedMs)),
+          fileBatch, tProg, backlog.map(_._2.toDouble), Seq(bf.k), stepLat(lo), loUntraced)
+      } else (Nil, Nil)
     Outcome(
       attempted = envelopes,
       failed = violations,
@@ -338,13 +357,12 @@ object Cdc {
       headline = headline, named = named, layers = layers, spans = spans,
       notes = Map(
         "steps" -> allSteps.map(s => Map("name" -> s.name, "files_per_s" -> s.filesPerS,
-          "rows_per_file" -> s.rowsPerFile, "files" -> s.files)),
-        "trigger_ms" -> triggerMs, "tail_percentile" -> tailP, "phase_s" -> phaseS,
+          "rows_per_file" -> s.rowsPerFile, "files" -> s.files, "untraced" -> s.untraced)),
+        "trigger_ms" -> triggerMs, "settle_ms" -> settleMs, "tail_percentile" -> tailP, "phase_s" -> phaseS,
         "trickle_batches" -> tProg.map(p => Map("batch" -> p.batchId, "start_ms" -> (startMs(p) - t0),
           "rows" -> p.numInputRows, "duration_ms" -> p.durationMs.asScala.toMap.map { case (k, v) => k -> v.longValue })),
         "backlog_files_max" -> (if (backlog.isEmpty) 0 else backlog.map(_._2).max),
-        "warmup_cycles" -> warmCycles,
-        "cycles" -> all.map(cy => Map("cycle" -> cy.k, "traced" -> cy.traced, "drain_ms" -> cy.drainMs,
-          "dlq_rows" -> cy.dlqRows, "replay_ms" -> cy.replayMs))))
+        "backfill_legs" -> Seq(warmLeg, bf).map(l => Map("leg" -> l.k, "timed" -> (l.k == bf.k),
+          "drain_ms" -> l.drainMs, "dlq_rows" -> l.dlqRows, "replay_ms" -> l.replayMs))))
   }
 }

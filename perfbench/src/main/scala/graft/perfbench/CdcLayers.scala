@@ -20,7 +20,7 @@ object CdcLayers {
       fileBatch: Map[String, Long],
       trickle: Seq[StreamingQueryProgress],
       backlog: Seq[Double],
-      cycles: Seq[(Int, Boolean)],
+      legs: Seq[Int],
       loTraced: Seq[Double],
       loUntraced: Seq[Double]): (Seq[(String, Double, String)], Seq[Span]) = {
     ctx.probe.drain()
@@ -63,19 +63,18 @@ object CdcLayers {
     }
     def tasksOf(js: Seq[JobRec]): Double = js.flatMap(_.stageIds.flatMap(stages.get)).map(_.tasks).sum.toDouble
 
-    // backfill and replay cycles
-    val tracedCycles = cycles.filter(_._2).map(_._1)
-    val bf = tracedCycles.flatMap(k => batchSpans(s"cdc_backfill_c$k", progressOf(ctx.probe, s"cdc_backfill_c$k")))
-    val allBf = cycles.flatMap(c => progressOf(ctx.probe, s"cdc_backfill_c${c._1}"))
-    val replay = cycles.map(c => progressOf(ctx.probe, s"cdc_replay_c${c._1}").filter(_.numInputRows > 0))
+    // the timed backfill and replay legs
+    val bf = legs.flatMap(k => batchSpans(s"cdc_backfill_c$k", progressOf(ctx.probe, s"cdc_backfill_c$k")))
+    val allBf = legs.flatMap(k => progressOf(ctx.probe, s"cdc_backfill_c$k"))
+    val replay = legs.map(k => progressOf(ctx.probe, s"cdc_replay_c$k").filter(_.numInputRows > 0))
     def writes(k: Int, sink: String) =
       qes.filter(q => q.writePath.exists(_.contains(s"/backfill/c$k/$sink/batch=")) &&
         !q.writePath.exists(_.contains("batch=replay-")))
-    val okW = tracedCycles.flatMap(writes(_, "ok"))
-    val dlqW = tracedCycles.flatMap(writes(_, "dlq"))
+    val okW = legs.flatMap(writes(_, "ok"))
+    val dlqW = legs.flatMap(writes(_, "dlq"))
     val okRows = okW.map(_.rows).sum.toDouble
     val dlqRows = dlqW.map(_.rows).sum.toDouble
-    val bfIn = tracedCycles.flatMap(k => progressOf(ctx.probe, s"cdc_backfill_c$k")).map(_.numInputRows).sum.toDouble
+    val bfIn = legs.flatMap(k => progressOf(ctx.probe, s"cdc_backfill_c$k")).map(_.numInputRows).sum.toDouble
     val bcast = (okW ++ dlqW).flatMap(_.broadcast)
 
     val self = Spans.selfTimes(spans.toSeq)
@@ -91,7 +90,7 @@ object CdcLayers {
       "sources.get_batch_ms" -> p50(data.map(phase(_, "getBatch"))),
       "sources.backlog_files_max" -> (if (backlog.isEmpty) 0.0 else backlog.max),
       "sinks.files_per_batch" -> (if (bf.isEmpty) 0.0 else (okW ++ dlqW).map(_.files).sum.toDouble / bf.size),
-      "sinks.bytes_written" -> (if (tracedCycles.isEmpty) 0.0 else (okW ++ dlqW).map(_.bytes).sum.toDouble / tracedCycles.size),
+      "sinks.bytes_written" -> (if (legs.isEmpty) 0.0 else (okW ++ dlqW).map(_.bytes).sum.toDouble / legs.size),
       "sinks.dlq_write_job_ms" -> p50(dlqW.map(_.durationMs)),
       "streaming.batches" -> data.size.toDouble,
       "streaming.rows_per_batch" -> Layers.mean(data.map(_.numInputRows.toDouble)),
@@ -103,9 +102,9 @@ object CdcLayers {
       "streaming.add_batch_ms" -> p50(data.map(phase(_, "addBatch"))),
       "streaming.jobs_per_batch" -> Layers.mean(tTraced.map(_._2.size.toDouble)),
       "streaming.tasks_per_batch" -> Layers.mean(tTraced.map(x => tasksOf(x._2))),
-      "streaming.backfill_batches" -> allBf.size.toDouble / math.max(1, cycles.size),
+      "streaming.backfill_batches" -> allBf.size.toDouble / math.max(1, legs.size),
       "streaming.backfill_add_batch_ms" -> p50(allBf.map(phase(_, "addBatch"))),
-      "streaming.replay_batches" -> replay.map(_.size).sum.toDouble / math.max(1, cycles.size),
+      "streaming.replay_batches" -> replay.map(_.size).sum.toDouble / math.max(1, legs.size),
       "streaming.replay_batch_ms" -> p50(replay.flatten.map(phase(_, "triggerExecution"))),
       "cdc.rows_in" -> (trickle ++ allBf).map(_.numInputRows.toDouble).sum,
       "cdc.valid_ratio" -> (if (bfIn == 0) 0.0 else (okRows + dlqRows) / bfIn),

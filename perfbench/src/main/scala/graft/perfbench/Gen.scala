@@ -49,12 +49,15 @@ object Gen {
       pick(seed, "c_seg", id, Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")).as("c_mktsegment"))
   }
 
-  /** The query tables, one parquet directory each under `dir`. */
-  def tables(s: SparkSession, dir: String, sf: Double, seed: Long): Unit = {
+  /** The query tables, one parquet file each under `dir`, written by
+    * `threads` concurrent jobs (each table is one task, so sequential writes
+    * would leave all but one core idle).
+    */
+  def tables(s: SparkSession, dir: String, sf: Double, seed: Long, threads: Int): Unit = {
     import s.implicits._
     val id = col("id")
-    def write(name: String, df: DataFrame): Unit =
-      df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$name.parquet")
+    val pending = scala.collection.mutable.ArrayBuffer.empty[(String, DataFrame)]
+    def write(name: String, df: DataFrame): Unit = pending += name -> df
 
     write("region", Seq("AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST").zipWithIndex
       .map { case (n, i) => (i, n) }.toDF("r_regionkey", "r_name"))
@@ -124,6 +127,15 @@ object Gen {
         transform(col("raw"), x => (x / sqrt(aggregate(col("raw"), lit(0.0), (a, y) => a + y * y))).cast("float"))
           .as("embedding"),
         col("label")))
+
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try {
+      pending.toSeq.map { case (name, df) =>
+        pool.submit(new Runnable {
+          def run(): Unit = df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$name.parquet")
+        })
+      }.foreach(_.get())
+    } finally pool.shutdown()
   }
 
   // ------------------------------------------------------------- CDC inputs

@@ -38,14 +38,13 @@ final class Ctx(
     val sessionReadyS: Double) {
   def wconf(name: String): JsonNode = conf.get("workloads").get(name)
 
-  /** Runs `stage` `setup_repetitions` times, each into a fresh directory,
-    * and returns the last repetition's value with the median staging time
-    * plus the session start-up time: the run's `setup_s`.
+  /** Runs `stage` `Ctx.SetupRepetitions` times, each into a fresh
+    * directory, and returns the last repetition's value with the median
+    * staging time plus the session start-up time: the run's `setup_s`.
     */
   def setup[T](stage: String => T): (T, Double) = {
-    val reps = conf.get("setup_repetitions").asInt()
     var out: Option[T] = None
-    val times = (1 to reps).map { i =>
+    val times = (1 to Ctx.SetupRepetitions).map { i =>
       val dir = s"$work/stage-$i"
       if (i > 1) Main.deleteTree(new File(s"$work/stage-${i - 1}"))
       val t0 = System.nanoTime()
@@ -54,6 +53,10 @@ final class Ctx(
     }
     (out.get, sessionReadyS + Stats.median(times))
   }
+}
+
+object Ctx {
+  val SetupRepetitions = 3
 }
 
 object Main {

@@ -161,15 +161,10 @@ object Probe {
   }
 }
 
-/** Process-wide JVM figures: peak heap in use (sampled), peak heap left in
-  * use after a collection (the live set, from the collectors' own
-  * notifications — far steadier across runs than the sampled peak, which
-  * mostly shows where a collection happened to fall), and GC time.
-  */
+/** Process-wide JVM figures: peak heap in use (sampled) and GC time. */
 final class JvmSampler(periodMs: Long = 20) {
   private val mem = ManagementFactory.getMemoryMXBean
   @volatile private var peak = 0L
-  @volatile private var livePeak = 0L
   @volatile private var running = true
   private val gc0 = gcMs
   private val t = new Thread(() => {
@@ -182,28 +177,12 @@ final class JvmSampler(periodMs: Long = 20) {
   t.setDaemon(true)
   t.start()
 
-  private val onGc: javax.management.NotificationListener = (n: javax.management.Notification, _: AnyRef) =>
-    if (n.getType == com.sun.management.GarbageCollectionNotificationInfo.GARBAGE_COLLECTION_NOTIFICATION) {
-      val info = com.sun.management.GarbageCollectionNotificationInfo
-        .from(n.getUserData.asInstanceOf[javax.management.openmbean.CompositeData])
-      val after = info.getGcInfo.getMemoryUsageAfterGc.values.asScala.map(_.getUsed).sum
-      synchronized { if (after > livePeak) livePeak = after }
-    }
-  private val emitters = ManagementFactory.getGarbageCollectorMXBeans.asScala
-    .collect { case e: javax.management.NotificationEmitter => e }
-  emitters.foreach(_.addNotificationListener(onGc, null, null))
-
   def gcMs: Long = ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).filter(_ > 0).sum
   def gcSinceStartMs: Long = gcMs - gc0
   def peakMb: Double = peak / 1048576.0
-  def livePeakMb: Double = livePeak / 1048576.0
-  def resetPeak(): Unit = synchronized {
-    peak = mem.getHeapMemoryUsage.getUsed
-    livePeak = 0L
-  }
+  def resetPeak(): Unit = peak = mem.getHeapMemoryUsage.getUsed
   def stop(): Unit = {
     running = false
     t.join()
-    emitters.foreach(e => scala.util.Try(e.removeNotificationListener(onGc)))
   }
 }

@@ -15,6 +15,11 @@ import graft.operators.SessionStageCache
   */
 object QueryMix {
 
+  /** Warm rounds per run: two rounds of the 30 queries give 60 warm
+    * executions, enough for a p80 with ten samples beyond it.
+    */
+  val WarmRounds = 2
+
   final case class Exec(query: String, round: Int, constructMs: Double, runMs: Double,
       stageBuildMs: Double, traced: Boolean, ok: Boolean, startMs: Long, endMs: Long) {
     def wallMs: Double = constructMs + runMs
@@ -36,8 +41,7 @@ object QueryMix {
     val sf = c.get("sf").asDouble()
     val dataSeed = c.get("data_seed").asLong()
     val list = c.get("queries").elements().asScala.map(q => q.get("name").asText() -> q.get("digest").asText()).toIndexedSeq
-    val minWarm = c.get("min_warm_executions").asInt()
-    val (dir, setupS) = ctx.setup { d => Gen.tables(spark, d, sf, dataSeed); d }
+    val (dir, setupS) = ctx.setup { d => Gen.tables(spark, d, sf, dataSeed, ctx.cpus); d }
 
     val execs = scala.collection.mutable.ArrayBuffer.empty[Exec]
     val problems = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -76,12 +80,11 @@ object QueryMix {
     val tStart = System.nanoTime()
     val cold = order(0).map(one(_, 0))
     val coldS = cold.map(_.wallMs).sum / 1e3
-    // warm rounds: at least `minWarm` executions and at least --seconds of
+    // warm rounds: at least `WarmRounds` and at least --seconds of
     // measuring; a traced run alternates the scheduler listeners off and on
     // per round to measure its own overhead
     var round = 1
-    while (execs.count(_.round > 0) < minWarm || (System.nanoTime() - tStart) / 1e9 < ctx.seconds ||
-        (ctx.trace && round <= 2)) {
+    while (round <= WarmRounds || (System.nanoTime() - tStart) / 1e9 < ctx.seconds) {
       if (ctx.trace) { if (round % 2 == 1) ctx.probe.detach() else ctx.probe.attach() }
       // start every round from a collected heap (untimed), so a round does
       // not pay for the garbage of the one before
@@ -90,7 +93,6 @@ object QueryMix {
       round += 1
     }
     if (ctx.trace) ctx.probe.attach()
-    val heapMb = ctx.jvm.livePeakMb
 
     val checked = list.map { case (q, want) => (q, want, digests.getOrElse(q, "no result")) }
     val bad = checked.filter { case (_, w, g) => w != g }
@@ -98,22 +100,26 @@ object QueryMix {
 
     val warm = execs.toSeq.filter(e => e.round > 0 && e.ok)
     val warmWall = warm.map(_.wallMs)
-    val roundTotals = warm.groupBy(_.round).values.map(_.map(_.wallMs).sum / 1e3).toSeq
+    val perQuery = warm.groupBy(_.query).map { case (q, es) => q -> Stats.median(es.map(_.wallMs)) }
+    // a warm round as the sum of each query's median warm wall: one slow
+    // round moves it less than pooling every execution would
+    val warmRoundS = perQuery.values.sum / 1e3
     val (tailP, tailV) = Stats.tail(warmWall)
+    val tailMean = Stats.tailMean(warmWall)._2
     val headline = Map(
       "setup_s" -> setupS,
-      "latency_p50_ms" -> Stats.median(warmWall),
-      "latency_tail_ms" -> tailV,
-      "throughput_per_s" -> warm.size / (warmWall.sum / 1e3))
+      "latency_p50_ms" -> Stats.hd(warmWall, 50),
+      "latency_tail_ms" -> tailMean,
+      "throughput_per_s" -> perQuery.size / warmRoundS)
     val named = Seq(
       ("setup_s", setupS, "s"),
       ("fail_frac", (execs.count(!_.ok) + bad.size).toDouble / execs.size, "ratio"),
       ("heap_peak_mb", ctx.jvm.peakMb, "MB"),
-      ("live_heap_peak_mb", heapMb, "MB"),
       ("mix_cold_s", coldS, "s"),
-      ("mix_warm_s", Stats.median(roundTotals), "s"),
-      ("query_p50_s", Stats.median(warmWall) / 1e3, "s"),
+      ("mix_warm_s", warmRoundS, "s"),
+      ("query_p50_s", Stats.hd(warmWall, 50) / 1e3, "s"),
       (f"query_p${tailP}%.0f_s", tailV / 1e3, "s"),
+      ("query_tail_mean_s", tailMean / 1e3, "s"),
       ("warm_executions", warm.size.toDouble, "count"))
 
     val (layers, spans) =
@@ -126,7 +132,7 @@ object QueryMix {
       notes = Map("sf" -> sf, "queries" -> list.size, "rounds" -> round,
         "tail_percentile" -> tailP,
         "digests" -> checked.map { case (q, w, g) => Map("query" -> q, "expected" -> w, "got" -> g) },
-        "per_query_warm_ms" -> warm.groupBy(_.query).map { case (q, es) => q -> Stats.median(es.map(_.wallMs)) },
+        "per_query_warm_ms" -> perQuery,
         "cold_ms" -> cold.map(e => e.query -> e.wallMs).toMap))
   }
 }

@@ -32,10 +32,48 @@ object Stats {
 
   def median(xs: Seq[Double]): Double = percentile(xs, 50.0)
 
-  /** (percentile used, value) under the tail rule. */
+  /** Harrell–Davis percentile: a Beta-weighted mean of every order
+    * statistic. The reported latency percentiles use it: when a sample
+    * falls into clusters (one per query of a mix, say), a single order
+    * statistic jumps between clusters from run to run, while this estimate
+    * moves smoothly. Empty input is an error.
+    */
+  def hd(xs: Seq[Double], p: Double): Double = {
+    require(xs.nonEmpty, "percentile of an empty sample")
+    val s = xs.sorted.toIndexedSeq
+    val n = s.size
+    if (n == 1) s.head
+    else {
+      val q = p / 100.0
+      val beta = new org.apache.commons.math3.distribution.BetaDistribution(q * (n + 1), (1 - q) * (n + 1))
+      var prev = 0.0
+      var acc = 0.0
+      for (i <- 1 to n) {
+        val c = beta.cumulativeProbability(i.toDouble / n)
+        acc += (c - prev) * s(i - 1)
+        prev = c
+      }
+      acc
+    }
+  }
+
+  /** (percentile used, mean of the samples beyond it) under the tail rule:
+    * the tail's expected shortfall, over at least `MinBeyond` samples. It
+    * is the reported tail latency: in a query mix the tail percentile can
+    * fall in the gap between the slow queries and the rest, while the mean
+    * beyond it moves only as the slow executions do.
+    */
+  def tailMean(xs: Seq[Double]): (Double, Double) = {
+    val p = tailPercentile(xs.size).getOrElse(
+      throw new IllegalArgumentException(s"${xs.size} samples: too few for any tail percentile"))
+    val beyond = xs.sorted.takeRight(math.floor(xs.size * (1.0 - p / 100.0) + 1e-9).toInt)
+    (p, beyond.sum / beyond.size)
+  }
+
+  /** (percentile used, Harrell–Davis value) under the tail rule. */
   def tail(xs: Seq[Double]): (Double, Double) = {
     val p = tailPercentile(xs.size).getOrElse(
       throw new IllegalArgumentException(s"${xs.size} samples: too few for any tail percentile"))
-    (p, percentile(xs, p))
+    (p, hd(xs, p))
   }
 }
