@@ -57,12 +57,13 @@ object QueryLayers {
     def selfMean(layer: String): Double =
       if (warmReqs.isEmpty) 0.0
       else spans.filter(s => s.layer == layer && warmReqs(s.request)).map(s => self(s.id)).sum / warmReqs.size
-    val roundTotals = execs.filter(e => e.round > 0 && e.ok).groupBy(_.round).toSeq.map { case (r, es) =>
-      (es.head.traced, es.map(_.wallMs).sum)
+    // each query's traced against its untraced warm executions, summed
+    // over the queries that have both
+    val pairs = execs.filter(e => e.round > 0 && e.ok).groupBy(_.query).values.toSeq.flatMap { es =>
+      val (on, off) = es.partition(_.traced)
+      if (on.isEmpty || off.isEmpty) None else Some((Stats.median(on.map(_.wallMs)), Stats.median(off.map(_.wallMs))))
     }
-    val on = roundTotals.filter(_._1).map(_._2)
-    val off = roundTotals.filterNot(_._1).map(_._2)
-    val overhead = if (on.isEmpty || off.isEmpty) 0.0 else (Stats.median(on) / Stats.median(off) - 1) * 100
+    val overhead = if (pairs.isEmpty) 0.0 else (pairs.map(_._1).sum / pairs.map(_._2).sum - 1) * 100
     val m = Layers.mean _
     val values = Map(
       "query.construct_ms" -> m(warmFigs.map(_.construct)),

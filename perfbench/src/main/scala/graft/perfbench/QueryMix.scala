@@ -73,6 +73,7 @@ object QueryMix {
       execs += e
       e
     }
+    val place = list.map(_._1).zipWithIndex.toMap
     def order(round: Int): Seq[String] =
       new scala.util.Random(ctx.seed * 1000003L + round).shuffle(list.map(_._1))
 
@@ -81,15 +82,19 @@ object QueryMix {
     val cold = order(0).map(one(_, 0))
     val coldS = cold.map(_.wallMs).sum / 1e3
     // warm rounds: at least `WarmRounds` and at least --seconds of
-    // measuring; a traced run alternates the scheduler listeners off and on
-    // per round to measure its own overhead
+    // measuring. A traced run traces half of the queries in one round and
+    // the other half in the next (by their place in the list), so that
+    // every query runs once traced and once untraced across two rounds:
+    // its own control when the overhead is measured
     var round = 1
     while (round <= WarmRounds || (System.nanoTime() - tStart) / 1e9 < ctx.seconds) {
-      if (ctx.trace) { if (round % 2 == 1) ctx.probe.detach() else ctx.probe.attach() }
       // start every round from a collected heap (untimed), so a round does
       // not pay for the garbage of the one before
       System.gc()
-      order(round).foreach(one(_, round))
+      order(round).foreach { q =>
+        if (ctx.trace) { if ((place(q) + round) % 2 == 0) ctx.probe.attach() else ctx.probe.detach() }
+        one(q, round)
+      }
       round += 1
     }
     if (ctx.trace) ctx.probe.attach()
