@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
@@ -17,15 +17,38 @@ import graft.operators.{Dedup, EventAnalytics, Similarity, TextAnalysis}
   *  - vector ops: list_cosine_similarity on DOUBLE[] — verified bit-equal
   *    to Spark's sequential `aggregate` fold.
   */
-object QueriesExt {
+object QueriesExt extends QueryModule {
 
   // SQL fragments shared by the oracles
   private[graft] val normSql = "regexp_replace(lower(trim(text)),'\\s+',' ','g')"
   private[graft] def h32Sql(x: String)  = s"CAST('0x' || substr(md5($x),1,8) AS BIGINT)"
   private def h60Sql(x: String)  = s"CAST('0x' || substr(md5($x),1,15) AS BIGINT)"
   private[graft] val (permsA, permsB)   = Hashing.PermsAsSqlLists
-  private[graft] val shinglesSql =
-    "CASE WHEN len(toks)>=3 THEN [array_to_string(toks[i:i+2],' ') for i in range(1,len(toks)-1)] ELSE [norm] END"
+
+  /** k-word shingle list comprehension with the short-doc fallback used by
+    * the codegen'd WordKGrams expression ([norm] when fewer than k words).
+    */
+  private[graft] def shinglesSql(k: Int) =
+    s"CASE WHEN len(toks)>=$k THEN [array_to_string(toks[i:i+${k - 1}],' ') for i in range(1,len(toks)-${k - 2})] ELSE [norm] END"
+
+  // Column helpers shared by the Spark side
+  /** Exact-decimal money arithmetic: the fixtures' money columns are
+    * 2-decimal values, so aggregating as DECIMAL is exact and
+    * order-independent — a plain double sum can flip a round() boundary
+    * depending on partition/merge order (observed: .595 rounding .59 vs
+    * .60 between engines). Matching oracle form:
+    * CAST(round(sum(CAST(x AS DECIMAL(18,2))), 2) AS DOUBLE).
+    */
+  private[graft] def dec2(c: Column): Column = c.cast("decimal(18,2)")
+
+  /** A date literal like "1997-01-01" as a timestamp (UTC session). */
+  private[graft] def tsLit(date: String): Column = to_timestamp(lit(date))
+
+  /** TPC-H line revenue, Σ price × (1 − discount), in exact decimals. */
+  private[graft] def revenue: Column =
+    sum(dec2(col("l_extendedprice")) * (lit(1) - dec2(col("l_discount"))))
+  private[graft] val revenueSql =
+    "sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2))))"
 
   // ------------------------------------------------------------- text (B5)
 
@@ -107,7 +130,7 @@ object QueriesExt {
   private val dedupMinhashSql =
     s"""WITH nrm AS (SELECT doc_id, $normSql AS norm FROM documents),
        |tok AS (SELECT doc_id, norm, string_split(norm,' ') AS toks FROM nrm),
-       |sh AS (SELECT doc_id, $shinglesSql AS shingles FROM tok),
+       |sh AS (SELECT doc_id, ${shinglesSql(3)} AS shingles FROM tok),
        |hs AS (SELECT doc_id, [${h32Sql("s")} for s in shingles] AS hlist,
        |       list_distinct(shingles) AS sset FROM sh),
        |sg AS (SELECT doc_id,
@@ -145,7 +168,7 @@ object QueriesExt {
   private val dedupMinhashCalibrationSql =
     s"""WITH nrm AS (SELECT doc_id, $normSql AS norm FROM documents),
        |tok AS (SELECT doc_id, norm, string_split(norm,' ') AS toks FROM nrm),
-       |sh AS (SELECT doc_id, $shinglesSql AS shingles FROM tok),
+       |sh AS (SELECT doc_id, ${shinglesSql(3)} AS shingles FROM tok),
        |hs AS (SELECT doc_id, [${h32Sql("s")} for s in shingles] AS hlist,
        |       list_distinct(shingles) AS sset FROM sh),
        |sg AS (SELECT doc_id,
@@ -207,7 +230,7 @@ object QueriesExt {
   private val dedupNgramJaccardSql =
     s"""WITH nrm AS (SELECT doc_id, source, $normSql AS norm FROM documents),
        |tok AS (SELECT doc_id, source, norm, string_split(norm,' ') AS toks FROM nrm),
-       |sh AS (SELECT doc_id, source, $shinglesSql AS shingles FROM tok),
+       |sh AS (SELECT doc_id, source, ${shinglesSql(3)} AS shingles FROM tok),
        |st AS (SELECT doc_id, source, list_distinct(shingles) AS sset FROM sh)
        |SELECT id_a, id_b, jaccard FROM (
        |  SELECT x.doc_id AS id_a, y.doc_id AS id_b,

@@ -26,7 +26,7 @@ import graft.operators.{Similarity, TextAnalysis}
   * hash ordering, 'g' flag on DuckDB regexp_replace to match Spark's
   * replace-all default).
   */
-object QueriesExt10 {
+object QueriesExt10 extends QueryModule {
 
   // ------------------------------------------------------------ PII scrub
 
@@ -85,13 +85,7 @@ object QueriesExt10 {
   private def textBoilerplate(s: SparkSession, dir: String): DataFrame =
     TextAnalysis.boilerplateScore(documents(s, dir), "doc_id", "text", shingleWords = 3, minDocFreq = 5)
 
-  private val normSql = "regexp_replace(lower(trim(text)),'\\s+',' ','g')"
-
-  /** Same k-word shingle comprehension as the codegen WordKGrams fallback
-    * contract (QueriesExt9 / parity rules).
-    */
-  private def shinglesSql(k: Int) =
-    s"CASE WHEN len(toks)>=$k THEN [array_to_string(toks[i:i+${k - 1}],' ') for i in range(1,len(toks)-${k - 2})] ELSE [norm] END"
+  import QueriesExt.{normSql, shinglesSql}
 
   private val textBoilerplateSql =
     s"""WITH t AS (SELECT doc_id, $normSql AS norm, string_split($normSql,' ') AS toks FROM documents),

@@ -24,9 +24,9 @@ import graft.operators.TextAnalysis
   * Parity rules as elsewhere: round(x, 6) on ratios, BIGINT casts on
   * counts, md5 ordering/content hashes so engines compare byte-for-byte.
   */
-object QueriesExt11 {
+object QueriesExt11 extends QueryModule {
 
-  private val normSql = "regexp_replace(lower(trim(text)),'\\s+',' ','g')"
+  import QueriesExt.normSql
 
   // -------------------------------------------------- sequence packing
 

@@ -9,7 +9,7 @@ import graft.Tables._
 /** Round-7 additions: the JSONL ingestion oracle (B36 — the one §2 entry
   * that was unit-tested only through round 6).
   */
-object QueriesExt12 {
+object QueriesExt12 extends QueryModule {
 
   // --------------------------------------------- JSONL ingest (B36)
 

@@ -11,9 +11,9 @@ import graft.operators.TextAnalysis
   * token-budget corpus selection (B42) — the two curation steps a training
   * pipeline runs between dedup and shard packing.
   */
-object QueriesExt13 {
+object QueriesExt13 extends QueryModule {
 
-  private val normSql = "regexp_replace(lower(trim(text)),'\\s+',' ','g')"
+  import QueriesExt.normSql
 
   // ------------------------------------- verbatim passage reuse (B41)
 

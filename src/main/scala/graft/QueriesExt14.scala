@@ -13,7 +13,7 @@ import graft.operators.TextAnalysis
   * WET-style HTML→text step that precedes every text-quality operator in a
   * web-scale corpus build.
   */
-object QueriesExt14 {
+object QueriesExt14 extends QueryModule {
 
   // ------------------------------ stream-stream interval join (B47)
 
@@ -45,17 +45,10 @@ object QueriesExt14 {
     // just to give the file source a directory to watch. The landing-zone
     // copy a real pipeline pays is a byte copy, not a decode+re-encode —
     // so copy the RAW fixture bytes via the filesystem and apply
-    // Tables.events' ts adaptation INSIDE the stream, branched on the
-    // observed schema exactly like the batch loader.
+    // Tables.events' ts adaptation INSIDE the stream.
     val srcDir = graft.streaming.WorkDirs.stageRawTable(s, dir, "events", "ssjoin-src")
     val schema = s.read.parquet(srcDir).schema
-    def adapt(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        case _ => df.withColumn("ts", col("ts").cast("timestamp"))
-      }
-    def stream = adapt(s.readStream.schema(schema).parquet(srcDir))
+    def stream = adaptEventsTs(s.readStream.schema(schema).parquet(srcDir))
 
     val joined = graft.streaming.StreamJoins.viewPurchaseAttribution(
       stream.filter(col("event_type") === "view"),
@@ -337,7 +330,7 @@ object QueriesExt14 {
 
   // ------------------------------ hashed-feature linear scorer (B49)
 
-  private val normSql = "regexp_replace(lower(trim(text)),'\\s+',' ','g')"
+  import QueriesExt.normSql
 
   /** fastText-style hashed bag-of-words linear classifier scoring: every
     * token hashes into one of 256 weight buckets (md5 feature hashing —

@@ -11,9 +11,9 @@ import graft.Tables._
   * calibration (B53) — the selection, incremental-refresh, and
   * threshold-setting steps of a corpus build.
   */
-object QueriesExt15 {
+object QueriesExt15 extends QueryModule {
 
-  private val normSqlD = "regexp_replace(lower(trim(text)),'\\s+',' ','g')"
+  import QueriesExt.normSql
 
   // ------------------------------ cluster-balanced sampling (B51)
 
@@ -440,7 +440,7 @@ object QueriesExt15 {
   }
 
   private val textAutocompleteTopkSql =
-    s"""WITH tok AS (SELECT unnest(string_split($normSqlD, ' ')) AS term FROM documents),
+    s"""WITH tok AS (SELECT unnest(string_split($normSql, ' ')) AS term FROM documents),
        |words0 AS (SELECT term FROM tok WHERE length(term) > 0),
        |words AS (SELECT term, count(*) AS cnt FROM words0 GROUP BY 1),
        |pfx AS (SELECT term, cnt,
@@ -493,8 +493,8 @@ object QueriesExt15 {
 
   private val textMaxWordRunSql =
     s"""WITH toks AS (SELECT doc_id,
-       |    unnest(string_split($normSqlD, ' ')) AS term,
-       |    generate_subscripts(string_split($normSqlD, ' '), 1) - 1 AS pos
+       |    unnest(string_split($normSql, ' ')) AS term,
+       |    generate_subscripts(string_split($normSql, ' '), 1) - 1 AS pos
        |  FROM documents),
        |runs AS (SELECT doc_id, term,
        |    pos - row_number() OVER (PARTITION BY doc_id, term ORDER BY pos) AS grp

@@ -11,7 +11,7 @@ import graft.Tables._
   * suffix-set equi-join (B62) — phrase statistics, behavioral modeling,
   * and the deny-list admission step of a crawl pipeline.
   */
-object QueriesExt16 {
+object QueriesExt16 extends QueryModule {
 
   // ------------------------------------ PMI collocation mining (B60)
 
@@ -906,7 +906,7 @@ object QueriesExt16 {
   }
 
   private val textLangidConfusionSql = {
-    val normSql = "regexp_replace(lower(trim(text)),'\\s+',' ','g')"
+    import QueriesExt.normSql
     s"""WITH base AS (SELECT doc_id, lang, string_split($normSql, ' ') AS toks FROM documents),
        |v AS (SELECT doc_id, lang,
        |  len(list_filter(toks, x -> list_contains(['the','and','of','is'], x))) AS v_en,

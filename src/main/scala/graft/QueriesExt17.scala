@@ -11,7 +11,7 @@ import graft.Tables._
   * budget allocation (B79) — the time-series densification, funnel-latency,
   * and scheduler steps of an analytics platform.
   */
-object QueriesExt17 {
+object QueriesExt17 extends QueryModule {
 
   // --------------------------- calendar gap fill + rolling (B77)
 
@@ -473,7 +473,7 @@ object QueriesExt17 {
     * the class summary is a 3-row hash-agg.
     */
   private def qParetoAbc(s: SparkSession, dir: String): DataFrame = {
-    val dec2 = (c: org.apache.spark.sql.Column) => c.cast("decimal(18,2)")
+    import QueriesExt.dec2
     val rev = lineitem(s, dir)
       .groupBy("l_partkey")
       .agg(

@@ -10,7 +10,7 @@ import graft.Tables._
   * null-safe join semantics (B92), and id-gap detection (B93) —
   * experiment hygiene, SQL-surface completion, and completeness auditing.
   */
-object QueriesExt18 {
+object QueriesExt18 extends QueryModule {
 
   // --------------------------- sample-ratio mismatch check (B91)
 

@@ -10,7 +10,7 @@ import graft.Tables._
   * script-mismatch auditing (B105), and signed-delta incremental view
   * maintenance (B106).
   */
-object QueriesExt19 {
+object QueriesExt19 extends QueryModule {
 
   // --------------------------- conformance checking (B104)
 

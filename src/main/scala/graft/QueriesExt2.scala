@@ -16,9 +16,9 @@ import graft.Tables._
   * (n, Σx, Σx², Σxy) with the identical closed formula on both engines —
   * deterministic to the last bit before round().
   */
-object QueriesExt2 {
+object QueriesExt2 extends QueryModule {
 
-  private def dec2(c: org.apache.spark.sql.Column) = c.cast("decimal(18,2)")
+  import QueriesExt.dec2
 
   // ------------------------------------------------------------ SQL surface
 

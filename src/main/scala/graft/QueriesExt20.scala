@@ -8,7 +8,7 @@ import graft.Tables._
 /** Round-7 additions, batch 14: consistent-hash ring assignment (B128) —
   * the elasticity proof behind shard maps and distributed caches.
   */
-object QueriesExt20 {
+object QueriesExt20 extends QueryModule {
 
   // --------------------------- consistent-hash ring (B128)
 

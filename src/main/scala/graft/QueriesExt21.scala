@@ -10,7 +10,7 @@ import graft.Tables._
   * training-data organization runs before publishing corpus statistics
   * (differential privacy) and before reading an A/B result (CUPED).
   */
-object QueriesExt21 {
+object QueriesExt21 extends QueryModule {
 
   // --------------------------- DP count release (B143)
 

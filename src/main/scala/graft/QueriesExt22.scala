@@ -11,7 +11,7 @@ import graft.Tables._
   * training-data platform runs daily (EMA dashboards, Zipf-sanity of a new
   * corpus, entity-graph components, and int8 storage of the vector index).
   */
-object QueriesExt22 {
+object QueriesExt22 extends QueryModule {
 
   // --------------------------- daily EMA (B146)
 

@@ -10,12 +10,10 @@ import graft.Tables._
   * that tells a curator whether a new source still adds content, and the
   * recall audit that certifies the ANN index against brute-force truth.
   */
-object QueriesExt23 {
+object QueriesExt23 extends QueryModule {
 
   // SQL fragments shared with the dedup oracles (same tokenization)
-  private val normSql = "regexp_replace(lower(trim(text)),'\\s+',' ','g')"
-  private val shinglesSql =
-    "CASE WHEN len(toks)>=3 THEN [array_to_string(toks[i:i+2],' ') for i in range(1,len(toks)-1)] ELSE [norm] END"
+  import QueriesExt.{normSql, shinglesSql}
 
   // --------------------------- deterministic epoch shuffle (B150)
 
@@ -127,7 +125,7 @@ object QueriesExt23 {
     s"""WITH base AS (SELECT doc_id, source, $normSql AS norm FROM documents),
        |t AS (SELECT doc_id, source, norm, string_split(norm, ' ') AS toks FROM base),
        |sh AS (
-       |  SELECT doc_id, source, unnest(list_distinct($shinglesSql)) AS shingle FROM t),
+       |  SELECT doc_id, source, unnest(list_distinct(${shinglesSql(3)})) AS shingle FROM t),
        |novel AS (
        |  SELECT fsource AS source, count(*) AS n_novel FROM (
        |    SELECT shingle, min_by(source, doc_id) AS fsource FROM sh GROUP BY 1)

@@ -11,7 +11,7 @@ import graft.Tables._
   * and the PQ/ADC recall audit that certifies the 8-byte-per-vector
   * compressed index (the memory-bound regime int8 (B149) can't reach).
   */
-object QueriesExt24 {
+object QueriesExt24 extends QueryModule {
 
   // --------------------------- degree histogram (B154)
 

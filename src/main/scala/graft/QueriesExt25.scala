@@ -10,9 +10,9 @@ import graft.Tables._
   * exact rolling median, and the day-of-week × hour usage heatmap — three
   * everyday curation/ops readouts.
   */
-object QueriesExt25 {
+object QueriesExt25 extends QueryModule {
 
-  private val normSql = "regexp_replace(lower(trim(text)),'\\s+',' ','g')"
+  import QueriesExt.normSql
 
   // --------------------------- prefix-duplicate clusters (B157)
 

@@ -11,9 +11,9 @@ import graft.Tables._
   * — closing the window-function inventory and the robust-statistics
   * toolkit.
   */
-object QueriesExt26 {
+object QueriesExt26 extends QueryModule {
 
-  private val normSql = "regexp_replace(lower(trim(text)),'\\s+',' ','g')"
+  import QueriesExt.normSql
 
   // --------------------------- cumulative distribution (B160)
 

@@ -11,7 +11,7 @@ import graft.cdc.Envelope
   * type the inventory lacked), the dedup SURVIVOR pick (clusters → an
   * actionable keep/remove list), and a CDC stream health profile.
   */
-object QueriesExt27 {
+object QueriesExt27 extends QueryModule {
 
   // --------------------------- full-outer reconciliation (B163)
 

@@ -10,7 +10,7 @@ import graft.Tables._
   * near-dup verification, and blob chunk planning — a fraud primitive, the
   * production-grade similarity weighting, and multimodal storage plumbing.
   */
-object QueriesExt28 {
+object QueriesExt28 extends QueryModule {
 
   // --------------------------- velocity rule (B166)
 

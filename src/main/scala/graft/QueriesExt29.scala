@@ -10,9 +10,9 @@ import graft.operators.TextAnalysis
   * small-file compaction plan — a tokenizer-budget readout and a layout
   * advisor.
   */
-object QueriesExt29 {
+object QueriesExt29 extends QueryModule {
 
-  private val normSql = "regexp_replace(lower(trim(text)),'\\s+',' ','g')"
+  import QueriesExt.normSql
 
   // --------------------------- tokenizer fertility (B172)
 

@@ -13,14 +13,9 @@ import graft.operators.{AsOfJoin, SkewJoin}
   * same answer), and the wider TPC-H-style relational sweep (Q7/Q9/Q13/
   * Q14/Q18/Q19/Q22 shapes adapted to the fixture schema).
   */
-object QueriesExt3 {
+object QueriesExt3 extends QueryModule {
 
-  private def dec2(c: org.apache.spark.sql.Column) = c.cast("decimal(18,2)")
-  private def tsLit(date: String)                  = to_timestamp(lit(date))
-  private def revenue =
-    sum(dec2(col("l_extendedprice")) * (lit(1) - dec2(col("l_discount"))))
-  private val revenueSql =
-    "sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2))))"
+  import QueriesExt.{dec2, revenue, revenueSql, tsLit}
 
   // --------------------------------------------------- as-of temporal join
 

@@ -10,7 +10,7 @@ import graft.Tables._
   * now ships, and the vacuum advisor for the history table the CDC family
   * builds.
   */
-object QueriesExt30 {
+object QueriesExt30 extends QueryModule {
 
   // --------------------------- filtered similarity search (B174)
 

@@ -10,7 +10,7 @@ import graft.Tables._
   * drift — the monitoring op that tells a vector pipeline its encoder or
   * corpus moved.
   */
-object QueriesExt31 {
+object QueriesExt31 extends QueryModule {
 
   // --------------------------- mixture rebalance plan (B176)
 

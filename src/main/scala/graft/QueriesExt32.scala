@@ -13,7 +13,7 @@ import graft.Tables._
   * the LSH cutoff, an equi-width histogram for optimizer stats, funnel
   * inter-stage latency order statistics, and a char-trigram entropy gate.
   */
-object QueriesExt32 {
+object QueriesExt32 extends QueryModule {
 
   // --------------------------- leakage-safe corpus split (B178)
 

@@ -12,7 +12,7 @@ import graft.Tables._
   * dedup for the multimodal lane, a CDC write-concurrency audit, and a
   * readability profile for the text-quality gate.
   */
-object QueriesExt33 {
+object QueriesExt33 extends QueryModule {
 
   // --------------------------- ANN recall vs nprobe (B185)
 

@@ -11,7 +11,7 @@ import graft.Tables._
   * mode), and the late-data profile that sizes a streaming watermark
   * before deployment.
   */
-object QueriesExt34 {
+object QueriesExt34 extends QueryModule {
 
   // --------------------------- dedup chain audit (B190)
 

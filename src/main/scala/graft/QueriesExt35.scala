@@ -11,7 +11,7 @@ import graft.Tables._
   * the dedup-rate-by-length bias audit that complements B186's by-source
   * mixture report.
   */
-object QueriesExt35 {
+object QueriesExt35 extends QueryModule {
 
   // --------------------------- per-dimension embedding stats (B192)
 

@@ -9,7 +9,7 @@ import graft.Tables._
   * shingle near-dups and the embedding space tell the same story?) and
   * the per-language source-mix entropy that watches corpus diversity.
   */
-object QueriesExt36 {
+object QueriesExt36 extends QueryModule {
 
   // --------------------------- cross-modal pair agreement (B195)
 

@@ -10,7 +10,7 @@ import graft.Tables._
   * profile over the event stream (the abuse-filter pass a training
   * corpus built from user events needs before anything else reads it).
   */
-object QueriesExt37 {
+object QueriesExt37 extends QueryModule {
 
   // --------------------------- IVF cell balance (B197)
 

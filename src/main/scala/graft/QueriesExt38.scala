@@ -9,7 +9,7 @@ import graft.Tables._
   * ANN's classic pathology, measured on the kNN graph the engine already
   * builds.
   */
-object QueriesExt38 {
+object QueriesExt38 extends QueryModule {
 
   // --------------------------- kNN hubness audit (B199)
 

@@ -11,7 +11,7 @@ import graft.Tables._
   * error bound, the telemetry primitive exact percentiles can't give a
   * stream (and the batch form of streaming/HistQuantiles).
   */
-object QueriesExt39 {
+object QueriesExt39 extends QueryModule {
 
   // --------------------------- HDR quantile digest (B201)
 

@@ -11,7 +11,7 @@ import graft.functions.Layout
   * before anything else) and z-order layout values. Both use only
   * engine-portable math (floor/abs/bitwise — no round-on-double).
   */
-object QueriesExt4 {
+object QueriesExt4 extends QueryModule {
 
   // ------------------------------------------------- int8 quantization
 

@@ -9,7 +9,7 @@ import graft.Tables._
   * sketch — the mergeable cardinality estimator whose entire state is k
   * hashes, certified here against the exact count per group.
   */
-object QueriesExt40 {
+object QueriesExt40 extends QueryModule {
 
   // --------------------------- KMV distinct sketch (B203)
 

@@ -10,7 +10,7 @@ import graft.Tables._
   * gap-based session depth histogram, and the per-source token-length
   * histogram that sizes sequence packing.
   */
-object QueriesExt41 {
+object QueriesExt41 extends QueryModule {
 
   // --------------------------- CDC payload evolution audit (B205)
 

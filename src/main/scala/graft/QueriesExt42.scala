@@ -9,7 +9,7 @@ import graft.Tables._
   * estimator — the mergeable heavy-hitter sketch whose entire state is a
   * d×w counter grid, certified here against exact counts.
   */
-object QueriesExt42 {
+object QueriesExt42 extends QueryModule {
 
   // --------------------------- CMS heavy hitters, certified (B208)
 

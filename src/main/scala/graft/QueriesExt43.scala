@@ -11,7 +11,7 @@ import graft.Tables._
   * the partial-aggregation merge proof that is the whole reason
   * sketches work at 100 TB.
   */
-object QueriesExt43 {
+object QueriesExt43 extends QueryModule {
 
   private val K        = 64
   private val TwoPow52 = 4503599627370496L

@@ -12,7 +12,7 @@ import graft.Tables._
   * percentiles per group, the certification table an SRE reads before
   * trusting the digest for alerting thresholds.
   */
-object QueriesExt44 {
+object QueriesExt44 extends QueryModule {
 
   // --------------------------- digest vs exact percentiles (B213)
 

@@ -13,7 +13,7 @@ import graft.Tables._
   * hashing), and truncated-embedding recall (the "can we store a
   * quarter of the vector?" certification an ANN storage budget needs).
   */
-object QueriesExt45 {
+object QueriesExt45 extends QueryModule {
 
   // --------------------------- Misra–Gries certified frequent items (B214)
 

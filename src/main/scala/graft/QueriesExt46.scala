@@ -10,7 +10,7 @@ import graft.Tables._
   * (l-diversity — group SIZE is not enough when every member shares the
   * sensitive value).
   */
-object QueriesExt46 {
+object QueriesExt46 extends QueryModule {
 
   // --------------------------- k-core peel profile (B220)
 

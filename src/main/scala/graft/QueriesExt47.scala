@@ -12,7 +12,7 @@ import graft.Tables._
   * salted join consumes — B9's `cdc_enrich_salted` implements the
   * mechanism, this derives the numbers from observed stats).
   */
-object QueriesExt47 {
+object QueriesExt47 extends QueryModule {
 
   // --------------------------- binarized-embedding recall (B222)
 

@@ -13,7 +13,7 @@ import graft.Tables._
   * detection (CUSUM argmax — B23 flags anomalous days, this finds the
   * day the regime shifted).
   */
-object QueriesExt48 {
+object QueriesExt48 extends QueryModule {
 
   // --------------------------- two-sample KS drift (B224)
 

@@ -11,7 +11,7 @@ import graft.Tables._
   * (n, Σx, Σx²) moment triple) and PSI — the industry-standard drift
   * score beside B98's L1 distance and B224's KS.
   */
-object QueriesExt49 {
+object QueriesExt49 extends QueryModule {
 
   // --------------------------- moment-merge identity (B227)
 

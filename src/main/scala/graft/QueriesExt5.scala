@@ -24,15 +24,9 @@ import graft.operators.TextAnalysis
   * Parity rules follow SparkEntry's Scaladoc (decimal money, epoch-ms
   * timestamps, BIGINT counts, round-6 ratios).
   */
-object QueriesExt5 {
+object QueriesExt5 extends QueryModule {
 
-  private def dec2(c: org.apache.spark.sql.Column) = c.cast("decimal(18,2)")
-  private def tsLit(date: String)                  = to_timestamp(lit(date))
-  private def revenue =
-    sum(dec2(col("l_extendedprice")) * (lit(1) - dec2(col("l_discount"))))
-  private val revenueSql =
-    "sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2))))"
-  private val normSql = "regexp_replace(lower(trim(text)),'\\s+',' ','g')"
+  import QueriesExt.{dec2, normSql, revenue, revenueSql, tsLit}
 
   // ------------------------------------------------------- TPC-H adaptations
 

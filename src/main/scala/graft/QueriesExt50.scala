@@ -12,7 +12,7 @@ import graft.Tables._
   * from ONE delta pass — the parameter sweep B180 pioneered for dedup
   * thresholds, applied to session gaps).
   */
-object QueriesExt50 {
+object QueriesExt50 extends QueryModule {
 
   // --------------------------- neighbor-Jaccard per edge (B229)
 

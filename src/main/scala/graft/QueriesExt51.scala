@@ -10,7 +10,7 @@ import graft.Tables._
   * binary outcome (did the user purchase), the staple chart every
   * targeting/propensity pipeline reads before shipping a model.
   */
-object QueriesExt51 {
+object QueriesExt51 extends QueryModule {
 
   // --------------------------- lift table (B232)
 

@@ -15,7 +15,7 @@ import graft.Tables._
   * similarity; winnowing certifies local overlap detection with a
   * bounded fingerprint density (≥ 1 per window, ~2/(w+1) of positions).
   */
-object QueriesExt52 {
+object QueriesExt52 extends QueryModule {
 
   // --------------------------- winnowing overlap (B233)
 

@@ -11,7 +11,7 @@ import graft.functions.Layout
   * dedup-detector agreement matrix (winnowing vs MinHash — which pairs
   * each layer sees that the other misses).
   */
-object QueriesExt53 {
+object QueriesExt53 extends QueryModule {
 
   // --------------------------- z-order pruning gain (B234)
 

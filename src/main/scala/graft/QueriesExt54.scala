@@ -11,7 +11,7 @@ import graft.Tables._
   * naive (tomorrow = today) and seasonal-naive (tomorrow = same day
   * last week); this emits those two bars.
   */
-object QueriesExt54 {
+object QueriesExt54 extends QueryModule {
 
   // --------------------------- forecast baselines (B236)
 

@@ -9,7 +9,7 @@ import graft.Tables._
   * by ALL-INTEGER power iteration — effective-dimensionality evidence
   * for the compression trades B217/B222 certify empirically.
   */
-object QueriesExt55 {
+object QueriesExt55 extends QueryModule {
 
   // --------------------------- PCA top component (B237)
 

@@ -14,7 +14,7 @@ import graft.Tables._
   * mean anything?), and the stationary distribution of the B61 Markov
   * chain (where user behavior settles, vs where it is today).
   */
-object QueriesExt56 {
+object QueriesExt56 extends QueryModule {
 
   // --------------------------- Poisson-bootstrap CI for the A/B diff (B238)
 

@@ -10,7 +10,7 @@ import graft.Tables._
   * of min/max footer stats for point lookups — the data-skipping lens
   * B234 (Z-order vs natural, range predicates) deliberately leaves out.
   */
-object QueriesExt57 {
+object QueriesExt57 extends QueryModule {
 
   // --------------------------- bloom file-skipping gain (B241)
 

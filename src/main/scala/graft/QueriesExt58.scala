@@ -13,7 +13,7 @@ import graft.Tables._
   * runs BOTH compressions at once, and their recall losses compound
   * multiplicatively — this is the number an operator actually ships.
   */
-object QueriesExt58 {
+object QueriesExt58 extends QueryModule {
 
   // --------------------------- IVF + PQ compound recall (B242)
 

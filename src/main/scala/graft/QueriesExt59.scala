@@ -11,7 +11,7 @@ import graft.Tables._
   * itself, the step between them that an LLM data pipeline actually
   * runs over its corpus.
   */
-object QueriesExt59 {
+object QueriesExt59 extends QueryModule {
 
   // --------------------------- BPE merge training (B243)
 

@@ -22,7 +22,7 @@ import graft.Tables._
   *    sampled byte (a real pipeline decodes a frame; the offset math,
   *    explode shape, and carried relational columns are the scale part).
   */
-object QueriesExt6 {
+object QueriesExt6 extends QueryModule {
 
   /** Change log synthesized deterministically from events: key lands in
     * (and beyond) the customer key domain so the merge exercises update,

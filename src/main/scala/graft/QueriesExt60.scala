@@ -13,7 +13,7 @@ import graft.operators.Similarity
   * analytics (Kaplan–Meier), the censoring-aware lens the retention/
   * latency views (B40/B78) approximate without.
   */
-object QueriesExt60 {
+object QueriesExt60 extends QueryModule {
 
   // --------------------------- greedy kNN-graph search (B244)
 

@@ -11,7 +11,7 @@ import graft.Tables._
   * difference-in-differences AFTER it (what if assignment wasn't
   * randomized and both arms drift with time?).
   */
-object QueriesExt61 {
+object QueriesExt61 extends QueryModule {
 
   // --------------------------- A/B power / MDE table (B246)
 

@@ -12,7 +12,7 @@ import graft.Tables._
   * with ("at 70% overlap we catch ~2/3 of dups; raise bands or lower τ
   * if that's not enough").
   */
-object QueriesExt62 {
+object QueriesExt62 extends QueryModule {
 
   // --------------------------- planted-recall certification (B248)
 
@@ -83,7 +83,7 @@ object QueriesExt62 {
        |    FROM documents WHERE doc_id % 5 = 0),
        |nrm AS (SELECT doc_id, $normSql AS norm FROM st),
        |tok AS (SELECT doc_id, norm, string_split(norm,' ') AS toks FROM nrm),
-       |sh AS (SELECT doc_id, $shinglesSql AS shingles FROM tok),
+       |sh AS (SELECT doc_id, ${shinglesSql(3)} AS shingles FROM tok),
        |hs AS (SELECT doc_id, [${h32Sql("s")} for s in shingles] AS hlist,
        |       list_distinct(shingles) AS sset FROM sh),
        |sg AS (SELECT doc_id,

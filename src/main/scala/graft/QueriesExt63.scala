@@ -11,7 +11,7 @@ import graft.Tables._
   * settles; this is the only one that asks "does it PREDICT anything",
   * the train/test discipline the numeric twin B236 applies to counts.
   */
-object QueriesExt63 {
+object QueriesExt63 extends QueryModule {
 
   // --------------------------- Markov holdout accuracy (B249)
 

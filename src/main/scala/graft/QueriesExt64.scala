@@ -10,7 +10,7 @@ import graft.Tables._
   * family — B50 assigns at a FIXED k and B197 audits one index's cell
   * balance; this is the table that picks k in the first place.
   */
-object QueriesExt64 {
+object QueriesExt64 extends QueryModule {
 
   // --------------------------- k-means/IVF elbow table (B250)
 

@@ -11,7 +11,7 @@ import graft.Tables._
   * scale argument in the text family lean on an exponent this query
   * finally measures.
   */
-object QueriesExt65 {
+object QueriesExt65 extends QueryModule {
 
   // --------------------------- Heaps'-law exponent (B251)
 

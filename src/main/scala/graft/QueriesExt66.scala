@@ -11,7 +11,7 @@ import graft.Tables._
   * much") — and Wilson intervals for proportion metrics, the
   * small-count-safe bound the A/B family still lacked.
   */
-object QueriesExt66 {
+object QueriesExt66 extends QueryModule {
 
   // --------------------------- dedup yield by granularity (B252)
 

@@ -11,7 +11,7 @@ import graft.Tables._
   * to a different tokenizer/mixture bucket than prose, and misrouted
   * code is a known quality sink.
   */
-object QueriesExt67 {
+object QueriesExt67 extends QueryModule {
 
   // --------------------------- code-vs-prose gate (B254)
 

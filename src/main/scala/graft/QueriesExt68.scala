@@ -12,7 +12,7 @@ import graft.Tables._
   * daily new-vs-returning mix, the audience-composition fundamental the
   * retention family (B40/B139) reads but never emits.
   */
-object QueriesExt68 {
+object QueriesExt68 extends QueryModule {
 
   // --------------------------- held-out LM perplexity (B255)
 

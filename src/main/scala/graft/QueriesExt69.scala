@@ -11,7 +11,7 @@ import graft.Tables._
   * alternative threshold would have admitted, from the same single
   * banding pass.
   */
-object QueriesExt69 {
+object QueriesExt69 extends QueryModule {
 
   // --------------------------- pHash threshold sweep (B257)
 

@@ -23,9 +23,9 @@ import graft.operators.{Dedup, TextAnalysis}
   *  - `q_multiset_ops`: INTERSECT ALL / EXCEPT ALL multiset semantics
   *    (the DISTINCT variants are covered by q_set_ops).
   */
-object QueriesExt7 {
+object QueriesExt7 extends QueryModule {
 
-  private val normSql = "regexp_replace(lower(trim(text)),'\\s+',' ','g')"
+  import QueriesExt.normSql
 
   // ------------------------------------------------- deterministic sampling
 

@@ -15,7 +15,7 @@ import graft.Tables._
   * leaderboard merge vs the exact global answer, loss measured), and
   * degree assortativity (B261).
   */
-object QueriesExt70 {
+object QueriesExt70 extends QueryModule {
 
   // --------------------------- one Louvain pass over brands (B258)
 

@@ -13,7 +13,7 @@ import graft.Tables._
   * dyadic-double DP inside a bounded-array fold (B263 — beating/losing
   * to B236's naive baselines is measured, not assumed).
   */
-object QueriesExt71 {
+object QueriesExt71 extends QueryModule {
 
   // --------------------------- Kneser–Ney held-out lift (B262)
 

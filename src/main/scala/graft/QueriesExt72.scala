@@ -13,7 +13,7 @@ import graft.Tables._
   * and engagement concentration — Gini + top-decile share — from the
   * bounded count-histogram (B267).
   */
-object QueriesExt72 {
+object QueriesExt72 extends QueryModule {
 
   // --------------------------- payload byte entropy (B264)
 
@@ -125,7 +125,7 @@ object QueriesExt72 {
     import QueriesExt.{normSql, shinglesSql, h32Sql, permsA, permsB}
     s"""WITH nrm AS (SELECT doc_id, $normSql AS norm FROM documents),
        |tok AS (SELECT doc_id, norm, string_split(norm,' ') AS toks FROM nrm),
-       |sh AS (SELECT doc_id, $shinglesSql AS shingles FROM tok),
+       |sh AS (SELECT doc_id, ${shinglesSql(3)} AS shingles FROM tok),
        |hs AS (SELECT doc_id, [${h32Sql("s")} for s in shingles] AS hlist,
        |       list_distinct(shingles) AS sset FROM sh),
        |sg AS (SELECT doc_id,

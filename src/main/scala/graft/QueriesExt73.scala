@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
@@ -11,9 +11,9 @@ import graft.Tables._
   * homoglyph/confusables normalization audit with planted truth (B269 —
   * the security-adjacent text-cleaning gate).
   */
-object QueriesExt73 {
+object QueriesExt73 extends QueryModule {
 
-  private def dec2(c: Column) = c.cast("decimal(18,2)")
+  import QueriesExt.dec2
 
   // --------------------------- IVM join delta (B268)
 

@@ -12,7 +12,7 @@ import graft.Tables._
   * sessions (bots, left-open tabs, TV dashboards) so downstream
   * per-session aggregates stay bounded.
   */
-object QueriesExt74 {
+object QueriesExt74 extends QueryModule {
 
   /** Gap + cap sessionization (`q_session_cap_split`): sessions close
     * after 30 min of inactivity OR at 4 h of cumulative duration —

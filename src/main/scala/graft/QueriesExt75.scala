@@ -12,7 +12,7 @@ import graft.Tables._
   * and the clustering coefficient on the shared degree-ordered triangle
   * operator (B273 — second consumer of GraphOps.orientedTriangles).
   */
-object QueriesExt75 {
+object QueriesExt75 extends QueryModule {
 
   // --------------------------- coordinated sampling (B271)
 

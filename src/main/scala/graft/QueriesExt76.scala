@@ -10,7 +10,7 @@ import graft.Tables._
   * (B274) — and the event-type daily-correlation matrix (B275), the
   * cross-metric companion to the drift family.
   */
-object QueriesExt76 {
+object QueriesExt76 extends QueryModule {
 
   // --------------------------- t-closeness (B274)
 

@@ -12,7 +12,7 @@ import graft.Tables._
   * hub set interconnect? B261's negative assortativity predicts no;
   * this measures it directly).
   */
-object QueriesExt77 {
+object QueriesExt77 extends QueryModule {
 
   // --------------------------- pairwise source JSD (B276)
 

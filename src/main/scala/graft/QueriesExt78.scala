@@ -13,7 +13,7 @@ import graft.Tables._
   * CDC arrival-order (out-of-orderness) audit. All-integer arithmetic
   * except documented final snaps.
   */
-object QueriesExt78 {
+object QueriesExt78 extends QueryModule {
 
   // --------------------------- Gopher-style quality rules (B278)
 

@@ -12,7 +12,7 @@ import graft.Tables._
   * partitioning pays at 100 TB), and the claimed-vs-sniffed payload
   * format audit for multimodal ingest.
   */
-object QueriesExt79 {
+object QueriesExt79 extends QueryModule {
 
   // --------------------------- dot vs cosine ranking agreement (B284)
 

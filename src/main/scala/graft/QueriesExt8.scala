@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,9 +19,9 @@ import graft.operators.TextAnalysis
   *  - `text_ngram_freq`: corpus-level word-bigram top-k, extending the
   *    unigram `text_word_topk` (SURVEY §2 B13).
   */
-object QueriesExt8 {
+object QueriesExt8 extends QueryModule {
 
-  private def dec(c: Column) = c.cast("decimal(18,2)")
+  import QueriesExt.dec2
 
   // --------------------------------------------------------------- unpivot
 
@@ -35,7 +35,7 @@ object QueriesExt8 {
     val wide = orders(s, dir)
       .groupBy(col("o_orderpriority"))
       .pivot("o_orderstatus", Seq("F", "O", "P"))
-      .agg(round(sum(dec(col("o_totalprice"))), 2).cast("double"))
+      .agg(round(sum(dec2(col("o_totalprice"))), 2).cast("double"))
       .select(
         col("o_orderpriority"),
         coalesce(col("F"), lit(0.0)).as("sum_f"),
@@ -80,7 +80,7 @@ object QueriesExt8 {
     orders(s, dir)
       .filter(col("o_totalprice") > 400000)
       .withColumn("cents", floor(col("o_totalprice") * 100 + 0.5).cast("long"))
-      .withColumn("nearby_sum", round(sum(dec(col("o_totalprice"))).over(w), 2).cast("double"))
+      .withColumn("nearby_sum", round(sum(dec2(col("o_totalprice"))).over(w), 2).cast("double"))
       .withColumn("n_nearby", count(lit(1)).over(w))
       .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"), col("nearby_sum"), col("n_nearby"))
   }

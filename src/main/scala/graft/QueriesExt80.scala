@@ -11,7 +11,7 @@ import graft.Tables._
   * sizing, a planted-truth exact-duplicate embedding audit, and the
   * substring canary contamination scan.
   */
-object QueriesExt80 {
+object QueriesExt80 extends QueryModule {
 
   // --------------------------- SRM over time (B288)
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables._
 
 /** Round-12 additions, batch 55 (B293): timestamp-quality audit. */
-object QueriesExt81 {
+object QueriesExt81 extends QueryModule {
 
   /** `events_ts_quality` — the timestamp-truncation detector: per event
     * type, the fraction of event times landing EXACTLY on second /

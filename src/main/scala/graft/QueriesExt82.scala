@@ -10,7 +10,7 @@ import graft.Tables._
   * the watermark→correctness bridge, debounce-gap pricing, and the
   * optimizer-trust selectivity audit.
   */
-object QueriesExt82 {
+object QueriesExt82 extends QueryModule {
 
   // ----------------------- seasonal (hour-of-day) anomaly (B294)
 

@@ -10,7 +10,7 @@ import graft.Tables._
   * aspect-ratio bucketing, hard-negative triplet mining, and the
   * always-valid sequential A/B test.
   */
-object QueriesExt83 {
+object QueriesExt83 extends QueryModule {
 
   // ------------------------- DSIR importance weights (B298)
 

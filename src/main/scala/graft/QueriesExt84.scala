@@ -10,7 +10,7 @@ import graft.Tables._
   * the storage-encoding gain audit, one NN-descent refinement round, and
   * diagonal-whitening isotropy gain.
   */
-object QueriesExt84 {
+object QueriesExt84 extends QueryModule {
 
   // ------------------------- webdataset shard plan (B302)
 

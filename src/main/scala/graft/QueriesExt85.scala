@@ -11,7 +11,7 @@ import graft.Tables._
   * distortion, and sweep-line concurrency with the Little's-law
   * cross-check.
   */
-object QueriesExt85 {
+object QueriesExt85 extends QueryModule {
 
   // ------------------------- PQ codebook Lloyd iteration (B306)
 

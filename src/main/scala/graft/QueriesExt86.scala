@@ -10,7 +10,7 @@ import graft.Tables._
   * TextRank sentence extraction, cluster purity vs labels, and U-shaped
   * multi-touch attribution.
   */
-object QueriesExt86 {
+object QueriesExt86 extends QueryModule {
 
   // ------------------------- HITS hubs & authorities (B310)
 

@@ -10,7 +10,7 @@ import graft.Tables._
   * attribution, the join-order cost surface, conditional character
   * entropy, and stand-in scene-cut detection.
   */
-object QueriesExt87 {
+object QueriesExt87 extends QueryModule {
 
   // ------------------------- Markov removal-effect attribution (B314)
 

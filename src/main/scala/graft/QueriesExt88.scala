@@ -11,7 +11,7 @@ import graft.functions.Hashing
   * checksums, forecast backtesting, personalized PageRank, and temporal
   * term drift.
   */
-object QueriesExt88 {
+object QueriesExt88 extends QueryModule {
 
   // ------------------------- order-free replica checksums (B318)
 

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * (weighted) argmax pass on the contracted graph. Registered under
   * B258 beside `graph_louvain_pass`.
   */
-object QueriesExt89 {
+object QueriesExt89 extends QueryModule {
 
   // --------------------------- one full Louvain LEVEL (B258, r14 depth)
 
@@ -215,11 +215,11 @@ object QueriesExt89 {
       |FROM picked2 p JOIN nb ON nb.fc = p.fc, mv, q1, q2
       |GROUP BY 1, 3, 4, 5, 6""".stripMargin
 
-  private[graft] def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "graph_louvain_level" -> (graphLouvainLevel _)
   )
 
-  private[graft] def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = Map(
     "graph_louvain_level" -> graphLouvainLevelSql
   )
 }

@@ -21,15 +21,9 @@ import graft.operators.TextAnalysis
   * Same parity rules as SparkEntry (round-6 ratios, BIGINT counts, md5
   * hash buckets).
   */
-object QueriesExt9 {
+object QueriesExt9 extends QueryModule {
 
-  private val normSql = "regexp_replace(lower(trim(text)),'\\s+',' ','g')"
-
-  /** k-word shingle list comprehension with the short-doc fallback used by
-    * the codegen'd WordKGrams expression ([norm] when fewer than k words).
-    */
-  private def shinglesSql(k: Int) =
-    s"CASE WHEN len(toks)>=$k THEN [array_to_string(toks[i:i+${k - 1}],' ') for i in range(1,len(toks)-${k - 2})] ELSE [norm] END"
+  import QueriesExt.{normSql, shinglesSql}
 
   // ------------------------------------------------- eval decontamination
 

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * improving, emitting the per-level curve. Registered under B258
   * beside `graph_louvain_pass` and `graph_louvain_level`.
   */
-object QueriesExt90 {
+object QueriesExt90 extends QueryModule {
 
   /** Hard level bound: each level runs on the previous level's
     * supergraph, and the matching merge at least halves whatever is
@@ -331,11 +331,11 @@ object QueriesExt90 {
        |FROM curve, conv WHERE level <= conv.ca""".stripMargin
   }
 
-  private[graft] def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "graph_louvain_converge" -> (graphLouvainConverge _)
   )
 
-  private[graft] def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = Map(
     "graph_louvain_converge" -> graphLouvainConvergeSql
   )
 }

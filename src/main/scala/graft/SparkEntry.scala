@@ -29,23 +29,14 @@ object SparkEntry {
 
   // ---------------------------------------------------------------- helpers
 
-  /** epoch-ms of a date literal like "1997-01-01" (UTC session). */
-  private def tsLit(date: String) = to_timestamp(lit(date))
+  import QueriesExt.{dec2, tsLit}
 
-  /** Exact-decimal money arithmetic: the fixtures' money columns are
-    * 2-decimal values, so aggregating as DECIMAL is exact and
-    * order-independent — a plain double sum can flip a round() boundary
-    * depending on partition/merge order (observed: .595 rounding .59 vs
-    * .60 between engines). Matching oracle form:
-    * CAST(round(sum(CAST(x AS DECIMAL(18,2))), 2) AS DOUBLE).
-    */
-  private def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(18,2)")
   // round BEFORE the double cast: round(DECIMAL) is exact HALF_UP in both
   // engines, while round(DOUBLE) differs (Spark rounds the shortest decimal
   // repr, DuckDB the binary value — .595 → .60 vs .59).
   private def decSum(c: org.apache.spark.sql.Column) = round(sum(c), 2).cast("double")
   private def decAvg(c: org.apache.spark.sql.Column) =
-    round(sum(dec(c)).cast("double") / count(lit(1)), 6)
+    round(sum(dec2(c)).cast("double") / count(lit(1)), 6)
 
   // ------------------------------------------------------- relational (B8)
 
@@ -128,7 +119,7 @@ object SparkEntry {
         col("l_quantity"),
         // per-row money math also goes through DECIMAL: round(double, 2)
         // diverges between engines on .xx5 boundaries (3 rows at sf0.1)
-        round(dec(col("l_extendedprice")) * (lit(1) - dec(col("l_discount"))), 2)
+        round(dec2(col("l_extendedprice")) * (lit(1) - dec2(col("l_discount"))), 2)
           .cast("double").as("net_price")
       )
 
@@ -147,7 +138,7 @@ object SparkEntry {
       .join(lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
       .filter(col("l_shipdate") > tsLit("1998-06-30"))
       .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-      .agg(decSum(dec(col("l_extendedprice")) * (lit(1) - dec(col("l_discount")))).as("revenue"))
+      .agg(decSum(dec2(col("l_extendedprice")) * (lit(1) - dec2(col("l_discount")))).as("revenue"))
       .select(
         col("l_orderkey"),
         unix_millis(col("o_orderdate").cast("timestamp")).as("o_orderdate_ms"),
@@ -177,7 +168,7 @@ object SparkEntry {
       .join(lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
       .join(supplier(s, dir), col("l_suppkey") === col("s_suppkey") && col("s_nationkey") === col("c_nationkey"))
       .groupBy(col("n_name"))
-      .agg(decSum(dec(col("l_extendedprice")) * (lit(1) - dec(col("l_discount")))).as("revenue"))
+      .agg(decSum(dec2(col("l_extendedprice")) * (lit(1) - dec2(col("l_discount")))).as("revenue"))
 
   private val q5Sql =
     """SELECT n_name, CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))), 2) AS DOUBLE) AS revenue
@@ -196,7 +187,7 @@ object SparkEntry {
         col("l_shipdate") >= tsLit("1996-01-01") && col("l_shipdate") < tsLit("1997-01-01") &&
           col("l_discount").between(0.03, 0.07) && col("l_quantity") < 25
       )
-      .agg(decSum(dec(col("l_extendedprice")) * dec(col("l_discount"))).as("revenue"))
+      .agg(decSum(dec2(col("l_extendedprice")) * dec2(col("l_discount"))).as("revenue"))
 
   private val q6Sql =
     """SELECT CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))), 2) AS DOUBLE) AS revenue
@@ -212,7 +203,7 @@ object SparkEntry {
       .filter(col("l_returnflag") === "R")
       .join(nation(s, dir), col("c_nationkey") === col("n_nationkey"))
       .groupBy(col("c_custkey"), col("c_name"), col("c_acctbal"), col("n_name"))
-      .agg(decSum(dec(col("l_extendedprice")) * (lit(1) - dec(col("l_discount")))).as("revenue"))
+      .agg(decSum(dec2(col("l_extendedprice")) * (lit(1) - dec2(col("l_discount")))).as("revenue"))
       .orderBy(col("revenue").desc, col("c_custkey").asc)
       .limit(20)
 
@@ -272,7 +263,7 @@ object SparkEntry {
       .join(broadcast(region(s, dir)), col("n_regionkey") === col("r_regionkey"))
       .join(orders(s, dir), col("c_custkey") === col("o_custkey"))
       .rollup(col("r_name"), col("n_name"))
-      .agg(decSum(dec(col("o_totalprice"))).as("sum_revenue"), count(lit(1)).as("n_orders"))
+      .agg(decSum(dec2(col("o_totalprice"))).as("sum_revenue"), count(lit(1)).as("n_orders"))
       .select(
         coalesce(col("r_name"), lit("ALL")).as("region_name"),
         coalesce(col("n_name"), lit("ALL")).as("nation_name"),
@@ -390,7 +381,7 @@ object SparkEntry {
         year(col("o_orderdate")).cast("long").as("o_year"),
         month(col("o_orderdate")).cast("long").as("o_month")
       )
-      .agg(count(lit(1)).as("n_orders"), decSum(dec(col("o_totalprice"))).as("sum_price"))
+      .agg(count(lit(1)).as("n_orders"), decSum(dec2(col("o_totalprice"))).as("sum_price"))
 
   private val qDateFuncsSql =
     """SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
@@ -464,53 +455,82 @@ object SparkEntry {
 
   // ------------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_pricing_summary"   -> (q1 _),
-    "q2_filter_project"    -> (q2 _),
-    "q3_shipping_priority" -> (q3 _),
-    "q5_local_supplier"    -> (q5 _),
-    "q6_revenue_forecast"  -> (q6 _),
-    "q10_returned_items"   -> (q10 _),
-    "q_top_orders"         -> (qTopOrders _),
-    "q_distinct_pairs"     -> (qDistinct _),
-    "q_window_rank"        -> (qWindowRank _),
-    "q_rollup_sales"       -> (qRollup _),
-    "q_semi_join"          -> (qSemiJoin _),
-    "q_anti_join"          -> (qAntiJoin _),
-    "q_set_ops"            -> (qSetOps _),
-    "q_broadcast_part"     -> (qBroadcastPart _),
-    "q_case_agg"           -> (qCaseAgg _),
-    "q_string_funcs"       -> (qStringFuncs _),
-    "q_date_funcs"         -> (qDateFuncs _),
-    "cdc_extract"          -> (cdcExtract _),
-    "cdc_latest_wins"      -> (cdcLatestWins _),
-    "cdc_enrich_join"      -> (cdcEnrichJoin _),
-    "cdc_enrich_dlq"       -> (cdcEnrichDlq _),
-    "cdc_dedup_exact"      -> (cdcDedupExact _)
-  ) ++ QueriesExt.queries ++ QueriesExt2.queries ++ QueriesExt3.queries ++ QueriesExt4.queries ++ QueriesExt5.queries ++ QueriesExt6.queries ++ QueriesExt7.queries ++ QueriesExt8.queries ++ QueriesExt9.queries ++ QueriesExt10.queries ++ QueriesExt11.queries ++ QueriesExt12.queries ++ QueriesExt13.queries ++ QueriesExt14.queries ++ QueriesExt15.queries ++ QueriesExt16.queries ++ QueriesExt17.queries ++ QueriesExt18.queries ++ QueriesExt19.queries ++ QueriesExt20.queries ++ QueriesExt21.queries ++ QueriesExt22.queries ++ QueriesExt23.queries ++ QueriesExt24.queries ++ QueriesExt25.queries ++ QueriesExt26.queries ++ QueriesExt27.queries ++ QueriesExt28.queries ++ QueriesExt29.queries ++ QueriesExt30.queries ++ QueriesExt31.queries ++ QueriesExt32.queries ++ QueriesExt33.queries ++ QueriesExt34.queries ++ QueriesExt35.queries ++ QueriesExt36.queries ++ QueriesExt37.queries ++ QueriesExt38.queries ++ QueriesExt39.queries ++ QueriesExt40.queries ++ QueriesExt41.queries ++ QueriesExt42.queries ++ QueriesExt43.queries ++ QueriesExt44.queries ++ QueriesExt45.queries ++ QueriesExt46.queries ++ QueriesExt47.queries ++ QueriesExt48.queries ++ QueriesExt49.queries ++ QueriesExt50.queries ++ QueriesExt51.queries ++ QueriesExt52.queries ++ QueriesExt53.queries ++ QueriesExt54.queries ++ QueriesExt55.queries ++ QueriesExt56.queries ++ QueriesExt57.queries ++ QueriesExt58.queries ++ QueriesExt59.queries ++ QueriesExt60.queries ++ QueriesExt61.queries ++ QueriesExt62.queries ++ QueriesExt63.queries ++ QueriesExt64.queries ++ QueriesExt65.queries ++ QueriesExt66.queries ++ QueriesExt67.queries ++ QueriesExt68.queries ++ QueriesExt69.queries ++ QueriesExt70.queries ++ QueriesExt71.queries ++ QueriesExt72.queries ++ QueriesExt73.queries ++ QueriesExt74.queries ++ QueriesExt75.queries ++ QueriesExt76.queries ++ QueriesExt77.queries ++ QueriesExt78.queries ++ QueriesExt79.queries ++ QueriesExt80.queries ++ QueriesExt81.queries ++ QueriesExt82.queries ++ QueriesExt83.queries ++ QueriesExt84.queries ++ QueriesExt85.queries ++ QueriesExt86.queries ++ QueriesExt87.queries ++ QueriesExt88.queries ++ QueriesExt89.queries ++ QueriesExt90.queries
+  /** The queries defined in this file. */
+  private object Relational extends QueryModule {
+    def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+      "q1_pricing_summary"   -> (q1 _),
+      "q2_filter_project"    -> (q2 _),
+      "q3_shipping_priority" -> (q3 _),
+      "q5_local_supplier"    -> (q5 _),
+      "q6_revenue_forecast"  -> (q6 _),
+      "q10_returned_items"   -> (q10 _),
+      "q_top_orders"         -> (qTopOrders _),
+      "q_distinct_pairs"     -> (qDistinct _),
+      "q_window_rank"        -> (qWindowRank _),
+      "q_rollup_sales"       -> (qRollup _),
+      "q_semi_join"          -> (qSemiJoin _),
+      "q_anti_join"          -> (qAntiJoin _),
+      "q_set_ops"            -> (qSetOps _),
+      "q_broadcast_part"     -> (qBroadcastPart _),
+      "q_case_agg"           -> (qCaseAgg _),
+      "q_string_funcs"       -> (qStringFuncs _),
+      "q_date_funcs"         -> (qDateFuncs _),
+      "cdc_extract"          -> (cdcExtract _),
+      "cdc_latest_wins"      -> (cdcLatestWins _),
+      "cdc_enrich_join"      -> (cdcEnrichJoin _),
+      "cdc_enrich_dlq"       -> (cdcEnrichDlq _),
+      "cdc_dedup_exact"      -> (cdcDedupExact _)
+    )
 
-  def oracleSql: Map[String, String] = Map(
-    "q1_pricing_summary"   -> q1Sql,
-    "q2_filter_project"    -> q2Sql,
-    "q3_shipping_priority" -> q3Sql,
-    "q5_local_supplier"    -> q5Sql,
-    "q6_revenue_forecast"  -> q6Sql,
-    "q10_returned_items"   -> q10Sql,
-    "q_top_orders"         -> qTopOrdersSql,
-    "q_distinct_pairs"     -> qDistinctSql,
-    "q_window_rank"        -> qWindowRankSql,
-    "q_rollup_sales"       -> qRollupSql,
-    "q_semi_join"          -> qSemiJoinSql,
-    "q_anti_join"          -> qAntiJoinSql,
-    "q_set_ops"            -> qSetOpsSql,
-    "q_broadcast_part"     -> qBroadcastPartSql,
-    "q_case_agg"           -> qCaseAggSql,
-    "q_string_funcs"       -> qStringFuncsSql,
-    "q_date_funcs"         -> qDateFuncsSql,
-    "cdc_extract"          -> cdcExtractSql,
-    "cdc_latest_wins"      -> cdcLatestWinsSql,
-    "cdc_enrich_join"      -> cdcEnrichJoinSql,
-    "cdc_enrich_dlq"       -> cdcEnrichDlqSql,
-    "cdc_dedup_exact"      -> cdcDedupExactSql
-  ) ++ QueriesExt.oracleSql ++ QueriesExt2.oracleSql ++ QueriesExt3.oracleSql ++ QueriesExt4.oracleSql ++ QueriesExt5.oracleSql ++ QueriesExt6.oracleSql ++ QueriesExt7.oracleSql ++ QueriesExt8.oracleSql ++ QueriesExt9.oracleSql ++ QueriesExt10.oracleSql ++ QueriesExt11.oracleSql ++ QueriesExt12.oracleSql ++ QueriesExt13.oracleSql ++ QueriesExt14.oracleSql ++ QueriesExt15.oracleSql ++ QueriesExt16.oracleSql ++ QueriesExt17.oracleSql ++ QueriesExt18.oracleSql ++ QueriesExt19.oracleSql ++ QueriesExt20.oracleSql ++ QueriesExt21.oracleSql ++ QueriesExt22.oracleSql ++ QueriesExt23.oracleSql ++ QueriesExt24.oracleSql ++ QueriesExt25.oracleSql ++ QueriesExt26.oracleSql ++ QueriesExt27.oracleSql ++ QueriesExt28.oracleSql ++ QueriesExt29.oracleSql ++ QueriesExt30.oracleSql ++ QueriesExt31.oracleSql ++ QueriesExt32.oracleSql ++ QueriesExt33.oracleSql ++ QueriesExt34.oracleSql ++ QueriesExt35.oracleSql ++ QueriesExt36.oracleSql ++ QueriesExt37.oracleSql ++ QueriesExt38.oracleSql ++ QueriesExt39.oracleSql ++ QueriesExt40.oracleSql ++ QueriesExt41.oracleSql ++ QueriesExt42.oracleSql ++ QueriesExt43.oracleSql ++ QueriesExt44.oracleSql ++ QueriesExt45.oracleSql ++ QueriesExt46.oracleSql ++ QueriesExt47.oracleSql ++ QueriesExt48.oracleSql ++ QueriesExt49.oracleSql ++ QueriesExt50.oracleSql ++ QueriesExt51.oracleSql ++ QueriesExt52.oracleSql ++ QueriesExt53.oracleSql ++ QueriesExt54.oracleSql ++ QueriesExt55.oracleSql ++ QueriesExt56.oracleSql ++ QueriesExt57.oracleSql ++ QueriesExt58.oracleSql ++ QueriesExt59.oracleSql ++ QueriesExt60.oracleSql ++ QueriesExt61.oracleSql ++ QueriesExt62.oracleSql ++ QueriesExt63.oracleSql ++ QueriesExt64.oracleSql ++ QueriesExt65.oracleSql ++ QueriesExt66.oracleSql ++ QueriesExt67.oracleSql ++ QueriesExt68.oracleSql ++ QueriesExt69.oracleSql ++ QueriesExt70.oracleSql ++ QueriesExt71.oracleSql ++ QueriesExt72.oracleSql ++ QueriesExt73.oracleSql ++ QueriesExt74.oracleSql ++ QueriesExt75.oracleSql ++ QueriesExt76.oracleSql ++ QueriesExt77.oracleSql ++ QueriesExt78.oracleSql ++ QueriesExt79.oracleSql ++ QueriesExt80.oracleSql ++ QueriesExt81.oracleSql ++ QueriesExt82.oracleSql ++ QueriesExt83.oracleSql ++ QueriesExt84.oracleSql ++ QueriesExt85.oracleSql ++ QueriesExt86.oracleSql ++ QueriesExt87.oracleSql ++ QueriesExt88.oracleSql ++ QueriesExt89.oracleSql ++ QueriesExt90.oracleSql
+    def oracleSql: Map[String, String] = Map(
+      "q1_pricing_summary"   -> q1Sql,
+      "q2_filter_project"    -> q2Sql,
+      "q3_shipping_priority" -> q3Sql,
+      "q5_local_supplier"    -> q5Sql,
+      "q6_revenue_forecast"  -> q6Sql,
+      "q10_returned_items"   -> q10Sql,
+      "q_top_orders"         -> qTopOrdersSql,
+      "q_distinct_pairs"     -> qDistinctSql,
+      "q_window_rank"        -> qWindowRankSql,
+      "q_rollup_sales"       -> qRollupSql,
+      "q_semi_join"          -> qSemiJoinSql,
+      "q_anti_join"          -> qAntiJoinSql,
+      "q_set_ops"            -> qSetOpsSql,
+      "q_broadcast_part"     -> qBroadcastPartSql,
+      "q_case_agg"           -> qCaseAggSql,
+      "q_string_funcs"       -> qStringFuncsSql,
+      "q_date_funcs"         -> qDateFuncsSql,
+      "cdc_extract"          -> cdcExtractSql,
+      "cdc_latest_wins"      -> cdcLatestWinsSql,
+      "cdc_enrich_join"      -> cdcEnrichJoinSql,
+      "cdc_enrich_dlq"       -> cdcEnrichDlqSql,
+      "cdc_dedup_exact"      -> cdcDedupExactSql
+    )
+  }
+
+  /** Every query module, listed once; both driver maps are built from
+    * this list, and a name registered twice throws while building them.
+    */
+  lazy val modules: Seq[QueryModule] = Seq(
+    Relational, QueriesExt, QueriesExt2, QueriesExt3, QueriesExt4, QueriesExt5, QueriesExt6,
+    QueriesExt7, QueriesExt8, QueriesExt9, QueriesExt10, QueriesExt11, QueriesExt12,
+    QueriesExt13, QueriesExt14, QueriesExt15, QueriesExt16, QueriesExt17, QueriesExt18,
+    QueriesExt19, QueriesExt20, QueriesExt21, QueriesExt22, QueriesExt23, QueriesExt24,
+    QueriesExt25, QueriesExt26, QueriesExt27, QueriesExt28, QueriesExt29, QueriesExt30,
+    QueriesExt31, QueriesExt32, QueriesExt33, QueriesExt34, QueriesExt35, QueriesExt36,
+    QueriesExt37, QueriesExt38, QueriesExt39, QueriesExt40, QueriesExt41, QueriesExt42,
+    QueriesExt43, QueriesExt44, QueriesExt45, QueriesExt46, QueriesExt47, QueriesExt48,
+    QueriesExt49, QueriesExt50, QueriesExt51, QueriesExt52, QueriesExt53, QueriesExt54,
+    QueriesExt55, QueriesExt56, QueriesExt57, QueriesExt58, QueriesExt59, QueriesExt60,
+    QueriesExt61, QueriesExt62, QueriesExt63, QueriesExt64, QueriesExt65, QueriesExt66,
+    QueriesExt67, QueriesExt68, QueriesExt69, QueriesExt70, QueriesExt71, QueriesExt72,
+    QueriesExt73, QueriesExt74, QueriesExt75, QueriesExt76, QueriesExt77, QueriesExt78,
+    QueriesExt79, QueriesExt80, QueriesExt81, QueriesExt82, QueriesExt83, QueriesExt84,
+    QueriesExt85, QueriesExt86, QueriesExt87, QueriesExt88, QueriesExt89, QueriesExt90
+  )
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    QueryModule.merged(modules)(_.queries)
+
+  lazy val oracleSql: Map[String, String] = QueryModule.merged(modules)(_.oracleSql)
 }

@@ -39,6 +39,9 @@ object Tables {
   def part(spark: SparkSession, dir: String): DataFrame       = table(spark, dir, "part")
   def orders(spark: SparkSession, dir: String): DataFrame     = table(spark, dir, "orders")
   def lineitem(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "lineitem")
+  def events(spark: SparkSession, dir: String): DataFrame =
+    memoized(spark, dir, "events@adapted")(adaptEventsTs(table(spark, dir, "events")))
+
   /** events.ts has shipped as TIMESTAMP(NANOS) (readable only as a raw
     * long via spark.sql.legacy.parquet.nanosAsLong) in some fixture
     * generations and TIMESTAMP(MICROS) in others — adapt on the observed
@@ -47,23 +50,23 @@ object Tables {
     *    since epoch-nanos exceed double's 2^53 exact-integer range);
     *  - timestamp/timestamp_ntz → already micros; cast unifies NTZ to
     *    TimestampType under the UTC session (a no-op re-interpretation).
+    * Any other type throws. Works on batch and streaming frames alike, so
+    * a stream over the raw fixture files adapts exactly as the loader does.
     */
-  def events(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "events@adapted") {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-      val raw = table(spark, dir, "events")
-      raw.schema("ts").dataType match {
-        case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        case TimestampType | TimestampNTZType =>
-          raw.withColumn("ts", col("ts").cast("timestamp"))
-        case other =>
-          throw new IllegalStateException(
-            s"events.ts has unsupported type $other — expected LongType (nanos " +
-              "fixture generation) or Timestamp[NTZ]Type (micros generation); " +
-              "a malformed fixture must fail loudly, not load as nulls")
-      }
+  def adaptEventsTs(raw: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+    raw.schema("ts").dataType match {
+      case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      case TimestampType | TimestampNTZType =>
+        raw.withColumn("ts", col("ts").cast("timestamp"))
+      case other =>
+        throw new IllegalStateException(
+          s"events.ts has unsupported type $other — expected LongType (nanos " +
+            "fixture generation) or Timestamp[NTZ]Type (micros generation); " +
+            "a malformed fixture must fail loudly, not load as nulls")
     }
+  }
   def documents(spark: SparkSession, dir: String): DataFrame  = table(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "embeddings")
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming leading-edge debounce — the streaming twin of the batch
   * `events_debounce` query (SURVEY.md §2 B72): per key, a record is
@@ -23,53 +23,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object Debounce {
 
-  private class LeadingEdgeProcessor[K, V](
-      ts: V => Long,
-      order: V => Long,
-      gapMs: Long,
-      ttl: TTLConfig
-  ) extends StatefulProcessor[K, V, V] {
-    @transient private var last: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      last = getHandle.getValueState[Long]("last", Encoders.scalaLong, ttl)
-
-    override def handleInputRows(key: K, rows: Iterator[V], timerValues: TimerValues): Iterator[V] = {
-      var l       = if (last.exists()) last.get() else Long.MinValue
-      val emitted = Vector.newBuilder[V]
-      // same deterministic in-batch (ts, order) discipline as the fMGWS form
-      rows.toVector.sortBy(r => (ts(r), order(r))).foreach { r =>
-        if (l == Long.MinValue || ts(r) - l > gapMs) emitted += r
-        if (ts(r) > l) l = ts(r)
-      }
-      if (l != Long.MinValue) last.update(l)
-      emitted.result().iterator
-    }
-  }
-
-  /** `leadingEdge` on Spark 4's `transformWithState` — identical emission
-    * contract to the fMGWS form below (burst-head only, every record
-    * advances the stored timestamp, in-batch (ts, order) determinism) with
-    * a typed `ValueState[Long]` and STORE-ENFORCED TTL instead of
-    * hand-rolled timeout bookkeeping. fMGWS is the deprecated path in
-    * Spark 4; TwsMigrationSpec proves output parity between the two forms
-    * under the RocksDB provider (the only store transformWithState
-    * supports).
-    */
-  def leadingEdgeTws[K, V](
-      ds: Dataset[V],
-      key: V => K,
-      ts: V => Long,
-      order: V => Long,
-      gapMs: Long,
-      ttl: TTLConfig = TTLConfig.NONE
-  )(implicit ke: Encoder[K], ve: Encoder[V]): Dataset[V] =
-    ds.groupByKey(key)
-      .transformWithState(
-        new LeadingEdgeProcessor[K, V](ts, order, gapMs, ttl),
-        TwsSupport.timeModeFor(ttl),
-        OutputMode.Append())
-
   def leadingEdge[K, V](
       ds: Dataset[V],
       key: V => K,
@@ -78,7 +31,7 @@ object Debounce {
       gapMs: Long,
       ttl: Option[java.time.Duration] = None
   )(implicit ke: Encoder[K], ve: Encoder[V], tupleEnc: Encoder[(K, V)]): Dataset[V] = {
-    implicit val stateEnc: Encoder[Long] = org.apache.spark.sql.Encoders.scalaLong
+    implicit val stateEnc: Encoder[Long] = Encoders.scalaLong
     val timeout =
       if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
 

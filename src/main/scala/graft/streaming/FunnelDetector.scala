@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming funnel detection — the stateful-pattern-match (CEP) shape
   * over a keyed event stream: per key, advance through an ordered stage
@@ -23,57 +23,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object FunnelDetector {
 
-  private class FunnelProcessor[K, V](
-      stage: V => String,
-      eventMs: V => Long,
-      stages: Seq[String]
-  , ttl: TTLConfig) extends StatefulProcessor[K, V, (K, Long)] {
-    private val completed = stages.length
-    @transient private var idxState: ValueState[Int] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      idxState = getHandle.getValueState[Int]("idx", Encoders.scalaInt, ttl)
-
-    override def handleInputRows(key: K, rows: Iterator[V], timerValues: TimerValues): Iterator[(K, Long)] = {
-      var idx = if (idxState.exists()) idxState.get() else 0
-      var hit: Option[Long] = None
-      if (idx < completed) {
-        // same deterministic (eventMs, stage) in-batch ordering as fMGWS
-        rows.toSeq.sortBy(r => (eventMs(r), stage(r))).foreach { r =>
-          if (idx < completed && stage(r) == stages(idx)) {
-            idx += 1
-            if (idx == completed) hit = Some(eventMs(r))
-          }
-        }
-        idxState.update(idx)
-      }
-      hit.map(ms => (key, ms)).iterator
-    }
-  }
-
-  /** `detect` on Spark 4's `transformWithState` — same CEP contract as the
-    * fMGWS form below (one completion per key ever, non-contiguous stage
-    * advance, in-batch (eventMs, stage) determinism) with the next-stage
-    * index in a typed `ValueState[Int]` and store-enforced TTL. fMGWS is
-    * the deprecated path in Spark 4; TwsMigrationSpec proves output parity
-    * under RocksDB.
-    */
-  def detectTws[K, V](
-      ds: Dataset[V],
-      key: V => K,
-      stage: V => String,
-      eventMs: V => Long,
-      stages: Seq[String],
-      ttl: TTLConfig = TTLConfig.NONE
-  )(implicit ke: Encoder[K], ve: Encoder[V], outEnc: Encoder[(K, Long)]): Dataset[(K, Long)] = {
-    require(stages.nonEmpty, "funnel needs at least one stage")
-    ds.groupByKey(key)
-      .transformWithState(
-        new FunnelProcessor[K, V](stage, eventMs, stages, ttl),
-        TwsSupport.timeModeFor(ttl),
-        OutputMode.Append())
-  }
-
   /** One completion per key: the key and the timestamp of the event that
     * completed the funnel.
     */
@@ -90,7 +39,7 @@ object FunnelDetector {
       outEnc: Encoder[(K, Long)]
   ): Dataset[(K, Long)] = {
     require(stages.nonEmpty, "funnel needs at least one stage")
-    implicit val stateEnc: Encoder[Int] = org.apache.spark.sql.Encoders.scalaInt
+    implicit val stateEnc: Encoder[Int] = Encoders.scalaInt
     val completed = stages.length
     val timeout =
       if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout

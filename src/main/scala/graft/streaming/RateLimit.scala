@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Per-key token-bucket rate limiting — the budget-based admission
   * control next to Debounce's gap-based one: each key owns a bucket of
@@ -22,63 +22,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object RateLimit {
 
-  private class TokenBucketProcessor[K, V](
-      ts: V => Long,
-      order: V => Long,
-      capacityMilli: Long,
-      refillMilliPerSec: Long,
-      ttl: TTLConfig
-  ) extends StatefulProcessor[K, V, V] {
-    @transient private var bucket: ValueState[(Long, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      bucket = getHandle.getValueState[(Long, Long)](
-        "bucket",
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong),
-        ttl)
-
-    override def handleInputRows(key: K, rows: Iterator[V], timerValues: TimerValues): Iterator[V] = {
-      var (tokens, lastMs) =
-        if (bucket.exists()) bucket.get() else (capacityMilli, Long.MinValue)
-      val emitted = Vector.newBuilder[V]
-      // identical integer-milli refill arithmetic to the fMGWS form
-      rows.toVector.sortBy(r => (ts(r), order(r))).foreach { r =>
-        val t = ts(r)
-        if (lastMs != Long.MinValue && t > lastMs) {
-          tokens = math.min(capacityMilli, tokens + (t - lastMs) * refillMilliPerSec / 1000L)
-        }
-        if (lastMs == Long.MinValue || t > lastMs) lastMs = t
-        if (tokens >= 1000L) {
-          tokens -= 1000L
-          emitted += r
-        }
-      }
-      bucket.update((tokens, lastMs))
-      emitted.result().iterator
-    }
-  }
-
-  /** `tokenBucket` on Spark 4's `transformWithState` — same event-time
-    * integer-milli admission arithmetic as the fMGWS form below, with the
-    * (tokens, last refill ms) pair in a typed `ValueState` and
-    * store-enforced TTL for idle-key expiry. fMGWS is the deprecated path
-    * in Spark 4; TwsMigrationSpec proves output parity under RocksDB.
-    */
-  def tokenBucketTws[K, V](
-      ds: Dataset[V],
-      key: V => K,
-      ts: V => Long,
-      order: V => Long,
-      capacityMilli: Long,
-      refillMilliPerSec: Long,
-      ttl: TTLConfig = TTLConfig.NONE
-  )(implicit ke: Encoder[K], ve: Encoder[V]): Dataset[V] =
-    ds.groupByKey(key)
-      .transformWithState(
-        new TokenBucketProcessor[K, V](ts, order, capacityMilli, refillMilliPerSec, ttl),
-        TwsSupport.timeModeFor(ttl),
-        OutputMode.Append())
-
   def tokenBucket[K, V](
       ds: Dataset[V],
       key: V => K,
@@ -88,11 +31,7 @@ object RateLimit {
       refillMilliPerSec: Long,
       ttl: Option[java.time.Duration] = None
   )(implicit ke: Encoder[K], ve: Encoder[V], tupleEnc: Encoder[(K, V)]): Dataset[V] = {
-    implicit val stateEnc: Encoder[(Long, Long)] =
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong
-      )
+    implicit val stateEnc: Encoder[(Long, Long)] = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
     val timeout =
       if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
 

@@ -4,16 +4,16 @@ import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Running per-key aggregates on Spark 4's `transformWithState` — the
-  * arbitrary-state API that supersedes flatMapGroupsWithState: typed state
+  * newer arbitrary-state API next to flatMapGroupsWithState: typed state
   * handles (`ValueState`/`MapState`/`ListState`) with per-state TTL,
-  * timers, and a RocksDB-backed store. This operator is the migration
-  * template for the repo's fMGWS twins (StatefulDedup, Debounce, Anomaly):
-  * one `ValueState[(n, Σx, Σx²)]` per key, updated per batch, emitting the
-  * refreshed running stats row in Update mode.
+  * timers, and a RocksDB-backed store: one `ValueState[(n, Σx, Σx²)]`
+  * per key, updated per batch, emitting the refreshed running stats row
+  * in Update mode.
   *
   * State budget: three numbers per live key, expired by the store after
   * `ttl` of no updates (TTLConfig is enforced by the state store itself —
-  * no hand-rolled timeout bookkeeping, unlike the fMGWS twins).
+  * no hand-rolled timeout bookkeeping, unlike the flatMapGroupsWithState
+  * operators such as StatefulDedup).
   *
   * Requires the RocksDB state store provider
   * (`spark.sql.streaming.stateStore.providerClass` =

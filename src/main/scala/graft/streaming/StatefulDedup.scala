@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming latest-wins compaction (SURVEY.md §2 B2, streaming form) —
   * the reference's `@Version` optimistic-lock counter as unbounded keyed
@@ -14,7 +14,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * but unbounded keys need a TTL policy: pass `ttl` to drop idle keys via
   * processing-time timeout — the watermark-bounded alternative to keeping
   * every key forever (documented trade-off: a key silent longer than the
-  * TTL re-emits its next record even if the version regressed).
+  * TTL re-emits its next record even if the version regressed). The
+  * timeout fires in a micro-batch that starts after the deadline and
+  * carries no record for the key; a batch that does carry one resets the
+  * deadline instead. Under a ProcessingTime trigger such batches run every
+  * interval.
+  *
+  * This operator, Debounce, RateLimit, FunnelDetector and Anomaly are
+  * built on `flatMapGroupsWithState`, which runs on both the default
+  * HDFS-backed state store and RocksDB; `transformWithState` runs on
+  * RocksDB only (StateBackend).
   */
 object StatefulDedup {
 
@@ -36,50 +45,6 @@ object StatefulDedup {
     df.withWatermark(eventTimeCol, delay)
       .dropDuplicatesWithinWatermark(keyCols)
 
-  private class LatestWinsProcessor[K, V](
-      version: V => Long,
-      ttl: TTLConfig
-  ) extends StatefulProcessor[K, V, V] {
-    @transient private var hwm: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      hwm = getHandle.getValueState[Long]("hwm", Encoders.scalaLong, ttl)
-
-    override def handleInputRows(key: K, rows: Iterator[V], timerValues: TimerValues): Iterator[V] = {
-      // reduce the batch to its single max-version record first so output
-      // is independent of same-key arrival order within the batch —
-      // identical discipline to the fMGWS form below
-      var best: Option[V] = None
-      rows.foreach { r =>
-        if (best.forall(b => version(r) > version(b))) best = Some(r)
-      }
-      val cur     = if (hwm.exists()) hwm.get() else Long.MinValue
-      val emitted = best.filter(r => version(r) > cur)
-      emitted.foreach(r => hwm.update(version(r)))
-      emitted.iterator
-    }
-  }
-
-  /** `latestWins` on Spark 4's `transformWithState` (B171's migration
-    * template applied to B2): same semantics as the fMGWS form below —
-    * per key, emit only records that advance the version high-water mark,
-    * batch-internal order independence included — but with a typed
-    * `ValueState[Long]` handle and STORE-ENFORCED TTL (`TTLConfig`)
-    * instead of hand-rolled timeout bookkeeping. Requires the RocksDB
-    * state store provider (transformWithState's state layout is not
-    * supported by the default HDFS-backed store); StatefulSpec proves
-    * output parity between the two paths under it. State budget:
-    * one Long per live key, expired by the store when a key goes cold.
-    */
-  def latestWinsTws[K, V](
-      ds: Dataset[V],
-      key: V => K,
-      version: V => Long,
-      ttl: TTLConfig = TTLConfig.NONE
-  )(implicit ke: Encoder[K], ve: Encoder[V]): Dataset[V] =
-    ds.groupByKey(key)
-      .transformWithState(new LatestWinsProcessor[K, V](version, ttl), TimeMode.None(), OutputMode.Append())
-
   /** Records that advance (key, version) survive; others are dropped. */
   def latestWins[K, V](
       ds: Dataset[V],
@@ -87,7 +52,7 @@ object StatefulDedup {
       version: V => Long,
       ttl: Option[java.time.Duration] = None
   )(implicit ke: Encoder[K], ve: Encoder[V], tupleEnc: Encoder[(K, V)]): Dataset[V] = {
-    implicit val stateEnc: Encoder[Long] = org.apache.spark.sql.Encoders.scalaLong
+    implicit val stateEnc: Encoder[Long] = Encoders.scalaLong
     val timeout =
       if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
 

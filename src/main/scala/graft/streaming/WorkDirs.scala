@@ -46,17 +46,30 @@ object WorkDirs {
     * FILE, which the file source cannot watch directly. Returns the
     * scratch dir. Any loader-side column adaptation (Tables.events' ts
     * normalization) must be applied INSIDE the stream by the caller.
+    *
+    * Only a single file or a flat directory of `.parquet` files can be
+    * staged: a table directory with subdirectories (a partitioned layout)
+    * or with no `.parquet` file throws, rather than staging part of the
+    * table or nothing.
     */
   def stageRawTable(spark: SparkSession, fixtureDir: String, table: String, label: String): String = {
-    val dst  = fresh(spark, label)
     val conf = spark.sparkContext.hadoopConfiguration
     val from = new Path(s"$fixtureDir/$table.parquet")
     val fs   = from.getFileSystem(conf)
-    val to   = new Path(dst)
     val files =
-      if (fs.getFileStatus(from).isDirectory)
-        fs.listStatus(from).filter(st => st.isFile && st.getPath.getName.endsWith(".parquet")).map(_.getPath)
-      else Array(from)
+      if (fs.getFileStatus(from).isDirectory) {
+        val entries = fs.listStatus(from)
+        val subdirs = entries.filter(_.isDirectory).map(_.getPath.getName).sorted
+        if (subdirs.nonEmpty)
+          throw new IllegalStateException(
+            s"cannot stage $from: it has subdirectories (${subdirs.mkString(", ")}), " +
+              "and only its top-level .parquet files would be copied")
+        entries.map(_.getPath).filter(_.getName.endsWith(".parquet"))
+      } else Array(from)
+    if (files.isEmpty)
+      throw new IllegalStateException(s"cannot stage $from: it holds no .parquet file")
+    val dst = fresh(spark, label)
+    val to  = new Path(dst)
     files.foreach { f =>
       org.apache.hadoop.fs.FileUtil.copy(fs, f, fs, new Path(to, f.getName), false, conf)
     }

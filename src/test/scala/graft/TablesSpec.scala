@@ -14,7 +14,8 @@ import org.apache.spark.sql.Row
   * as TimestampType under the UTC session). The loader must produce
   * identical rows from either — CORRECTNESS_r07's stale events_debounce row
   * came from a mid-round switch between the two. This spec pins both paths
-  * plus the fail-loudly branch for malformed schemas.
+  * plus the fail-loudly branch for malformed schemas, in the batch loader
+  * and in the stream that events_stream_join reads.
   */
 class TablesSpec extends GraftSpecBase {
 
@@ -71,6 +72,15 @@ class TablesSpec extends GraftSpecBase {
     val rows = Seq(Row(1L, "2024-01-01 00:00:00", 1L, "t", 1.0, "{}"))
     val dir  = writeEvents(rows, schemaWithTs(StringType))
     val e = intercept[IllegalStateException](Tables.events(spark, dir))
+    assert(e.getMessage.contains("unsupported type"))
+  }
+
+  test("events_stream_join fails loudly on an unexpected ts type instead of streaming nulls") {
+    // the query streams the raw fixture files and adapts ts inside the
+    // stream; a double ts must throw there too, not be cast
+    val rows = Seq(Row(1L, 1.7e9, 1L, "view", 1.0, "{}"))
+    val dir  = writeEvents(rows, schemaWithTs(DoubleType))
+    val e = intercept[IllegalStateException](SparkEntry.queries("events_stream_join")(spark, dir))
     assert(e.getMessage.contains("unsupported type"))
   }
 }

@@ -87,30 +87,52 @@ class StatefulSpec extends GraftSpecBase {
       !spark.conf.get("spark.sql.streaming.stateStore.providerClass").contains("RocksDB"))
   }
 
-  test("latestWins on transformWithState: output parity with the fMGWS form") {
-    // B171's migration template applied to the highest-value fMGWS twin:
-    // the SAME batches through both paths under the RocksDB provider must
-    // emit the SAME records (version advances only, in-batch max first)
-    implicit val sqlCtx = spark.sqlContext
-    val batches = Seq(
-      Seq(CdcRec(1, 10, "a"), CdcRec(1, 5, "stale"), CdcRec(2, 7, "x")),
-      Seq(CdcRec(1, 20, "b"), CdcRec(2, 7, "dup"), CdcRec(1, 15, "late")),
-      Seq(CdcRec(3, 1, "new"), CdcRec(1, 19, "older"))
-    )
-    def drain(qname: String, mk: MemoryStream[CdcRec] => org.apache.spark.sql.Dataset[CdcRec]): Seq[CdcRec] = {
-      val input = MemoryStream[CdcRec]
-      val q = mk(input).writeStream.format("memory").queryName(qname).outputMode("append").start()
-      batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
-      q.stop()
-      spark.table(qname).as[CdcRec].collect().toSeq.sortBy(r => (r.user_id, r.version))
+  test("latestWins with a ttl: an expired key re-emits a lower version, a live key does not") {
+    // Checkpointed Trigger.Once runs over a parquet source, as in
+    // TwsTtlSpec: a processing-time timeout keeps asking for another
+    // batch, so AvailableNow would not terminate. The default HDFS-backed
+    // store is used on purpose — flatMapGroupsWithState runs on it.
+    val ttl    = java.time.Duration.ofSeconds(10)
+    val srcDir = java.nio.file.Files.createTempDirectory("lw-ttl-src").toString
+    val ckpt   = java.nio.file.Files.createTempDirectory("lw-ttl-ckpt").toString
+    @annotation.nowarn("cat=deprecation")
+    val once = org.apache.spark.sql.streaming.Trigger.Once()
+
+    def write(recs: CdcRec*): Unit = recs.toDS().write.mode("append").parquet(srcDir)
+    def drainOnce(): Seq[CdcRec] = {
+      val got = new java.util.concurrent.CopyOnWriteArrayList[CdcRec]()
+      val src = spark.readStream.schema(spark.emptyDataset[CdcRec].schema).parquet(srcDir).as[CdcRec]
+      val q = StatefulDedup.latestWins[Long, CdcRec](src, _.user_id, _.version, ttl = Some(ttl))
+        .writeStream.outputMode("append")
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[CdcRec], _: Long) =>
+          batch.collect().foreach(got.add)
+        }
+        .option("checkpointLocation", ckpt)
+        .trigger(once)
+        .start()
+      q.awaitTermination()
+      import scala.jdk.CollectionConverters._
+      got.asScala.toSeq.sortBy(r => (r.user_id, r.version))
     }
-    StateBackend.withRocksDB(spark) {
-      val tws   = drain("lw_tws", in => StatefulDedup.latestWinsTws[Long, CdcRec](in.toDS(), _.user_id, _.version))
-      val fmgws = drain("lw_fmgws", in => StatefulDedup.latestWins[Long, CdcRec](in.toDS(), _.user_id, _.version))
-      assert(tws === fmgws)
-      assert(tws === Seq(
-        CdcRec(1, 10, "a"), CdcRec(1, 20, "b"), CdcRec(2, 7, "x"), CdcRec(3, 1, "new")))
-    }
+
+    write(CdcRec(1, 10, "a"), CdcRec(2, 10, "b"))
+    assert(drainOnce() === Seq(CdcRec(1, 10, "a"), CdcRec(2, 10, "b")))
+
+    // within the ttl: a batch that carries only key 2 leaves key 1's
+    // high-water mark in place, so key 1's regressed version is dropped
+    write(CdcRec(2, 11, "b2"))
+    assert(drainOnce() === Seq(CdcRec(2, 11, "b2")))
+    write(CdcRec(1, 5, "stale"))
+    assert(drainOnce() === Seq.empty)
+
+    // past the ttl: a batch that carries only key 2 fires key 1's timeout
+    // and drops its state, so key 1's next record is emitted although its
+    // version regressed; key 2, just seen, still drops its regression
+    Thread.sleep(ttl.toMillis + 2000)
+    write(CdcRec(2, 12, "b3"))
+    assert(drainOnce() === Seq(CdcRec(2, 12, "b3")))
+    write(CdcRec(1, 3, "after-expiry"), CdcRec(2, 4, "stale"))
+    assert(drainOnce() === Seq(CdcRec(1, 3, "after-expiry")))
   }
 
   test("decodeOrDlq splits well-formed and corrupt frames (A13)") {
